@@ -26,7 +26,9 @@ import json
 import os
 import resource
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -108,6 +110,94 @@ def start_session(work: Path, run_dir: Path, event_dir: Path | None):
     t0 = time.perf_counter()
     spark = get_spark(app_name="perfbench", master=f"local[{cores}]", extra_conf=conf)
     return spark, time.perf_counter() - t0
+
+
+def _stat(pid: int) -> list[str] | None:
+    """Fields of /proc/<pid>/stat after the command name (state first)."""
+    try:
+        with open(f"/proc/{pid}/stat", encoding="ascii", errors="replace") as f:
+            return f.read().rsplit(")", 1)[1].split()
+    except (OSError, IndexError):
+        return None
+
+
+def _descendants() -> dict[int, str]:
+    """Every process below this one, as pid -> start time (so that a
+    reused pid is not taken for the process)."""
+    children: dict[int, list[tuple[int, str]]] = {}
+    for entry in os.listdir("/proc"):
+        fields = _stat(int(entry)) if entry.isdigit() else None
+        if fields:
+            children.setdefault(int(fields[1]), []).append((int(entry), fields[19]))
+    below, todo = {}, [os.getpid()]
+    while todo:
+        for pid, start in children.get(todo.pop(), []):
+            if pid not in below:
+                below[pid] = start
+                todo.append(pid)
+    return below
+
+
+def _running(procs: dict[int, str]) -> dict[int, str]:
+    out = {}
+    for pid, start in procs.items():
+        fields = _stat(pid)
+        if fields and fields[19] == start and fields[0] not in "ZX":
+            out[pid] = start
+    return out
+
+
+def _wait_gone(procs: dict[int, str], seconds: float) -> dict[int, str]:
+    deadline = time.monotonic() + seconds
+    while procs and time.monotonic() < deadline:
+        time.sleep(0.05)
+        procs = _running(procs)
+    return procs
+
+
+def stop_session(spark=None) -> None:
+    """Stop Spark, end the JVM and every process under it (the Python
+    worker daemon and its workers), and wait until each has ended.
+
+    ``spark.stop()`` alone leaves the JVM to notice later that its driver
+    is gone, so it would outlive the benchmark. Safe to call twice."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    below = _descendants()
+    try:
+        if spark is not None:
+            spark.stop()
+        elif SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    finally:
+        proc = getattr(gateway, "proc", None)
+        try:
+            gateway.shutdown()
+        except Exception:
+            pass
+        SparkContext._gateway = SparkContext._jvm = None
+        if proc is not None:
+            # the gateway JVM exits when its stdin closes
+            if proc.stdin is not None:
+                proc.stdin.close()
+            try:
+                proc.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        below.update(_descendants())
+        left = _wait_gone(_running(below), 15)
+        for pid in left:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except OSError:
+                pass
+        left = _wait_gone(left, 15)
+        if left:
+            print(f"perfbench: processes still running: {sorted(left)}", file=sys.stderr)
 
 
 def peak_rss_mb(spark) -> float:
@@ -199,6 +289,8 @@ def main(argv=None) -> int:
     if not (ROOT / "pawpaw_spark").is_dir() or not (ROOT / "BENCHMARK.json").is_file():
         print(f"perfbench: no pawpaw_spark package or BENCHMARK.json under {ROOT}", file=sys.stderr)
         return 2
+    # a terminated run still leaves through run()'s cleanup
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     result = run(args.workload, args.seed, args.seconds, bool(args.trace))
     print(json.dumps(result))
     return 0 if result["correct"] else 1
@@ -233,7 +325,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, sizes: dict = SIZ
             recs.append(run_workload(ctx, WORKLOADS[n], sizes, seconds))
         recs[0]["metrics"]["setup_s"] += session_s
         rss = peak_rss_mb(spark)
-        spark.stop()
+        stop_session(spark)
         for rec in recs:
             rec["metrics"]["peak_rss_mb"] = rss
             report(rec)
@@ -255,9 +347,12 @@ def run(workload: str, seed: int, seconds: float, trace: bool, sizes: dict = SIZ
         failed = sum(r["failed"] for r in recs)
         return {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": metrics}
     finally:
-        if tracer is not None:
-            tracer.uninstall()
-        shutil.rmtree(run_dir, ignore_errors=True)
+        try:
+            stop_session()
+        finally:
+            if tracer is not None:
+                tracer.uninstall()
+            shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def _add_layers(recs, tracer, event_dir: Path, session_s: float, work: Path, seed: int) -> None:
