@@ -4806,11 +4806,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # entries (heaviest machinery first: SCC, the Datalog family, PageRank
 # variants, winnowing, PQ, LM, DSIR — the round-4 verdict's priority
 # list), so CORRECTNESS_r05 extends the union to 150/173.
-# _GATE_RESIDUAL queues the remaining 17 PLUS the six queries ADDED in
-# round 5 (kg_sparql_exists/arith/cond/strops, media_audio_feats,
-# media_image_feats) at positions 51-73 for the round-6 window. Every
-# entry is also covered by the committed CHECK_sf*.json value sweeps
-# at 3 scale factors (all 173 green at sf0.001 / sf0.01 / sf0.1).
+# _GATE_RESIDUAL queues the remaining 17 PLUS the seven queries ADDED in
+# round 5 (kg_sparql_exists/arith/cond/strops/update, media_audio_feats,
+# media_image_feats) at positions 51-74 for the round-6 window: 24
+# entries. Every entry is also covered by the committed CHECK_sf*.json
+# value sweeps (all 174 green at sf0.001 / sf0.01; the sf0.1 sweep has
+# 173 and predates kg_sparql_update).
 _GATE_LEAD = [
     "kg_scc", "kg_datalog", "kg_datalog_neg", "kg_datalog_delta",
     "kg_pagerank", "kg_pagerank_weighted", "kg_ppr", "kg_hits",

@@ -17,8 +17,16 @@ as driver objects, rules are plain data shipped to executors, and all
 plan-level optimization is delegated to Catalyst.
 """
 
+from pyspark import TaskContext
+
 from pawpaw_spark.rules import RuleSet, extract, split, gaps, literal, BoundaryRetention
 from pawpaw_spark.session import get_spark
+
+if TaskContext.get() is not None:
+    # imported by a UDF inside a Python worker: once per worker process
+    from pawpaw_spark import _worker
+
+    _worker.install()
 
 __version__ = "0.1.0"
 

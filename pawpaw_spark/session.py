@@ -14,6 +14,13 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def _worker_python_path() -> str:
+    """The directory holding ``pawpaw_spark``, then any inherited
+    ``PYTHONPATH``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH", "")) if p)
+
+
 def get_spark(
     app_name: str = "pawpaw_spark",
     master: str | None = None,
@@ -63,6 +70,9 @@ def get_spark(
             os.environ.get("PAWPAW_SPARK_WAREHOUSE", "/tmp/pawpaw_spark_warehouse"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers start in the JVM's cwd; put this package on
+        # their path so UDFs unpickle from any cwd
+        .config("spark.executorEnv.PYTHONPATH", _worker_python_path())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

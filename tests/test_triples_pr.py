@@ -98,6 +98,106 @@ def test_fused_edges_multiset_equal_relational(spark):
     assert diff.count() == 0
 
 
+def test_fused_edges_equal_plain_python(spark):
+    """build_edges_fused's triple set is the derivation spec applied in
+    plain Python to ``kernel.segment_text`` records of every document."""
+    from pawpaw_spark.corpus import generate_rows
+    from pawpaw_spark.kernel import segment_text
+    from pawpaw_spark.operators.triples import build_edges_fused
+    from pawpaw_spark.rulesets import LANG_RULES, TEXT_RULES
+
+    src = source_df(spark, n_files=120, seed=11)
+    got = {(r.subj, r.pred, r.obj) for r in build_edges_fused(src).select("subj", "pred", "obj").collect()}
+
+    expected = set()
+    for r in generate_rows(120, 11):
+        rules = LANG_RULES.get(r["lang"], TEXT_RULES)
+        value_descs = {d for rule in rules for d in rule.value_for}
+        text = r["content"]
+        records = [
+            (a, b, desc, parent, text[a:b] if desc in value_descs else None)
+            for a, b, desc, parent, _depth, _tag in segment_text(text, rules)
+        ]
+        doc_id = f"{r['repo']}/{r['path']}@{r['commit']}"
+        expected |= derive_triples(doc_id, r["repo"], records)
+    assert got == expected
+
+
+def test_udf_workers_skip_unchanged_zip_rereads(spark):
+    """A UDF whose closure references pawpaw_spark runs in a worker
+    where zipimporters no longer re-read unchanged archives per task."""
+    import sys
+
+    import pyarrow as pa
+
+    from pawpaw_spark import _worker
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        read, calls = zipimport._read_directory, []
+
+        def counting(path):
+            calls.append(path)
+            return read(path)
+
+        importlib.invalidate_caches()  # first sight since install may read
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        zips = sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "installed": [_worker.installed()], "zips": [zips], "rereads": [len(calls)],
+        })
+
+    rows = (
+        spark.range(0, 4, 1, 4)
+        .mapInArrow(probe, "installed boolean, zips long, rereads long")
+        .collect()
+    )
+    assert len(rows) == 4
+    if sys.version_info < (3, 13):
+        assert all(r.installed for r in rows)
+    assert all(r.zips > 0 for r in rows)  # pyspark.zip is on the worker path
+    assert all(r.rereads == 0 for r in rows)
+
+
+def test_fused_edges_from_foreign_cwd(tmp_path):
+    """A Spark driver started outside the repository: its Python workers must
+    still import pawpaw_spark (get_spark ships the package path)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import json, sys; sys.path.insert(0, {root!r})\n"
+        "from pawpaw_spark.session import get_spark\n"
+        "from pawpaw_spark.operators.triples import build_edges_fused\n"
+        "spark = get_spark(app_name='foreign_cwd', master='local[1]')\n"
+        "src = spark.createDataFrame([('r', 'a.py', 'c1', 'python', 'def f(x):\\n    z = g(x)\\n    return z\\n')],\n"
+        "                            'repo string, path string, commit string, lang string, content string')\n"
+        "rows = build_edges_fused(src).select('pred').collect()\n"
+        "print(json.dumps(sorted(r.pred for r in rows)))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PAWPAW_SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    preds = json.loads(out.stdout.strip().splitlines()[-1])
+    assert {"CONTAINS", "HAS_SEGMENT", "DEFINES", "REFERENCES"} <= set(preds)
+
+
 class TestEdgeDiff:
     def _df(self, spark, rows):
         return spark.createDataFrame(
