@@ -6179,18 +6179,20 @@ def oracle_sql() -> dict[str, str]:
             FROM defs LEFT JOIN e ON e.dst = defs.s
         """,
         # STRBEFORE/STRAFTER/REPLACE replay: position-guarded substr
-        # CASEs ('' when the separator is absent — the SPARQL pin) and
-        # regexp_replace with the 'g' flag (DuckDB defaults to first
-        # match; SPARQL and Spark replace all)
+        # CASEs (NULL for an unbound input, '' when the separator is
+        # absent — the SPARQL pins) and regexp_replace with the 'g' flag
+        # (DuckDB defaults to first match; SPARQL and Spark replace all)
         "kg_sparql_strops": f"""
             WITH {_KG_EDGE_CTE},
             defs AS (
               SELECT DISTINCT 'sym:f_' || r AS s FROM mem)
             SELECT s,
-              CASE WHEN position(':' IN s) > 0
+              CASE WHEN s IS NULL THEN NULL
+                   WHEN position(':' IN s) > 0
                    THEN substr(s, 1, position(':' IN s) - 1)
                    ELSE '' END AS pre,
-              CASE WHEN position('_' IN s) > 0
+              CASE WHEN s IS NULL THEN NULL
+                   WHEN position('_' IN s) > 0
                    THEN substr(s, position('_' IN s) + 1)
                    ELSE '' END AS post,
               regexp_replace(s, '[0-9]+', 'N', 'g') AS rep

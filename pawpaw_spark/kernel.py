@@ -16,23 +16,22 @@ references, the code here is written from the spec):
 * gap complement incl. zero-width handling (``pawpaw/ito.py:196-269``).
 * literal substring scan (``pawpaw/ito.py:271-314``).
 
-The ``regex`` module is used (same engine as the reference) with
-``pos``/``endpos`` so no substring copies are made — the zero-copy
-invariant of the reference, preserved.
+The ``regex`` module is the engine (the reference's engine too): its
+``pos``/``endpos`` keep matching zero-copy, the invariant of the
+reference, and ``Match.allspans`` returns every repeated capture of
+every group in one call.
+
+Each rule is compiled once per rule object into a :class:`_Program`
+(pattern, selected groups with their descs, target test) and cached on
+the rule; a RuleSet caches its programs and ``value_for`` descs the same
+way. Per document, the kernel only matches and appends.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-try:  # same third-party engine the reference depends on; stdlib re fallback
-    import regex as _re_engine
-
-    _HAS_REGEX = True
-except ImportError:  # pragma: no cover
-    import re as _re_engine
-
-    _HAS_REGEX = False
+import regex
 
 from pawpaw_spark.rules import ROOT, BoundaryRetention, Rule, RuleSet
 
@@ -40,34 +39,95 @@ from pawpaw_spark.rules import ROOT, BoundaryRetention, Rule, RuleSet
 # list index of the parent segment; root has parent_idx -1.
 SegRecord = tuple[int, int, str | None, int, int, str]
 
-_PATTERN_CACHE: dict[tuple[str, int], "object"] = {}
+# shared by every rule object in the process: Spark unpickles a UDF's
+# rules per task, so the per-rule cache alone would recompile per task
+_PATTERN_CACHE: dict[tuple[str, int], regex.Pattern] = {}
 
 
-def _compiled(pattern: str, flags: int):
+def _compiled(pattern: str, flags: int) -> regex.Pattern:
     key = (pattern, flags)
     rx = _PATTERN_CACHE.get(key)
     if rx is None:
-        rx = _re_engine.compile(pattern, flags)
-        _PATTERN_CACHE[key] = rx
+        rx = _PATTERN_CACHE[key] = regex.compile(pattern, flags)
     return rx
 
 
-def _finditer(rx, text: str, start: int, stop: int):
-    if _HAS_REGEX:
-        return rx.finditer(text, pos=start, endpos=stop)
-    # stdlib re has no endpos: emulate (slower; only hit if regex missing)
-    return (m for m in rx.finditer(text, start) if m.end() <= stop)
+class _Program:
+    """One rule, compiled for interpretation.
+
+    ``on`` is None for ``"*"``, else the set of target descs. For
+    extract, ``groups`` holds ``(group index, group key, desc)`` per
+    selected capture group and ``desc_fn`` the callable desc, if any.
+    """
+
+    __slots__ = ("rule", "apply", "on", "rx", "groups", "desc_fn")
+
+    def __init__(self, rule: Rule):
+        self.rule = rule
+        on = rule.on
+        self.on = None if on == "*" else frozenset(on if isinstance(on, tuple) else (on,))
+        self.rx = None
+        self.groups = ()
+        self.desc_fn = None
+        if rule.kind in ("extract", "split", "gaps"):
+            self.rx = _compiled(rule.pattern, rule.flags)
+        if rule.kind == "extract":
+            self.groups = _extract_groups(self.rx, rule)
+            self.desc_fn = rule.desc if callable(rule.desc) else None
+        if rule.kind == "extract" and rule.within_gaps_of is not None:
+            self.apply = _apply_extract_in_gaps
+        else:
+            self.apply = _APPLY[rule.kind]
 
 
-def _group_keys(rx, group_filter: tuple[str, ...] | None) -> list[str | int]:
-    """Default key selection: every capture group except group 0; named
+def _extract_groups(rx: regex.Pattern, rule: Rule) -> tuple[tuple[int, str | int, str | None], ...]:
+    """``(group index, group key, desc)`` per selected capture group.
+
+    Default selection is every capture group except group 0; named
     groups by name, unnamed by index (reference GroupKeys.preferred +
     Extract's default ``gk != '0'`` filter, ``pawpaw/ito.py:21-44`` /
-    ``extract.py:17``)."""
-    if group_filter is not None:
-        return list(group_filter)
-    index_to_name = {i: n for n, i in rx.groupindex.items()}
-    return [index_to_name.get(i, i) for i in range(1, rx.groups + 1)]
+    ``extract.py:17``). The desc is the rule's fixed desc, else the group
+    key as a string; None when the desc is callable."""
+    if rule.group_filter is not None:
+        keys = list(rule.group_filter)
+    else:
+        index_to_name = {i: n for n, i in rx.groupindex.items()}
+        keys = [index_to_name.get(i, i) for i in range(1, rx.groups + 1)]
+    out = []
+    for key in keys:
+        g = rx.groupindex.get(key) if isinstance(key, str) else key
+        if g is None or not 0 <= g <= rx.groups:
+            raise IndexError(f"no such group: {key!r} in {rule.pattern!r}")
+        if callable(rule.desc):
+            desc = None
+        else:
+            desc = str(key) if rule.desc is None else rule.desc
+        out.append((g, key, desc))
+    return tuple(out)
+
+
+def _program(rule: Rule) -> _Program:
+    # frozen dataclass: cache through __dict__ (Rule.__getstate__ drops it)
+    prog = rule.__dict__.get("_kernel")
+    if prog is None:
+        prog = rule.__dict__["_kernel"] = _Program(rule)
+    return prog
+
+
+def _ruleset_program(rules: RuleSet | Iterable[Rule]) -> tuple[tuple[_Program, ...], frozenset]:
+    """(compiled rules, ``value_for`` descs), cached on a RuleSet."""
+    if isinstance(rules, RuleSet):
+        cached = rules.__dict__.get("_kernel")
+        if cached is None:
+            cached = rules.__dict__["_kernel"] = _ruleset_program(rules.rules)
+        return cached
+    progs = tuple(_program(r) for r in rules)
+    return progs, frozenset(d for p in progs for d in p.rule.value_for)
+
+
+def value_descs(rules: RuleSet | Iterable[Rule]) -> frozenset:
+    """Descs whose text is materialized (``Rule.value_for``)."""
+    return _ruleset_program(rules)[1]
 
 
 def _build_match_tree(
@@ -98,45 +158,49 @@ def _build_match_tree(
 
 
 def _apply_extract(
-    out: list[SegRecord], rule: Rule, text: str, t_idx: int,
+    out: list[SegRecord], prog: _Program, text: str, t_idx: int,
     sub: tuple[int, int] | None = None,
 ) -> None:
     ts, te, _, _, t_depth, _ = out[t_idx]
     if sub is not None:
         ts, te = sub
-    rx = _compiled(rule.pattern, rule.flags)
-    keys = _group_keys(rx, rule.group_filter)
+    depth = t_depth + 1
+    tag = prog.rule.tag
+    limit = prog.rule.limit
+    groups = prog.groups
+    # callable desc: the reference's desc_func f(match, group_key) -> str
+    # (extract.py:16)
+    desc_fn = prog.desc_fn
     n_roots = 0
-    for m in _finditer(rx, text, ts, te):
-        spans_keys: list[tuple[int, int, str]] = []
-        for gk in keys:
-            if _HAS_REGEX:
-                spans = m.spans(gk)
-            else:
-                s = m.span(gk)
-                spans = [s] if s[0] >= 0 else []
-            for s0, s1 in spans:
-                if s0 >= 0:
-                    if callable(rule.desc):
-                        # desc_func surface: f(match, group_key) -> str
-                        # (reference Extract desc default, extract.py:16)
-                        desc = rule.desc(m, gk)
-                    elif rule.desc is not None:
-                        desc = rule.desc
-                    else:
-                        desc = str(gk)
-                    spans_keys.append((s0, s1, desc))
-        n_roots += _build_match_tree(out, spans_keys, t_idx, t_depth, rule.tag)
-        if rule.limit is not None and n_roots >= rule.limit:
+    for m in prog.rx.finditer(text, ts, te):
+        spans = m.allspans()
+        # a match with one capture (most matches) is its own tree; only
+        # several captures need the sort + containment stack
+        first = caps = None
+        for g, key, desc in groups:
+            for s0, s1 in spans[g]:
+                cap = (s0, s1, desc if desc_fn is None else desc_fn(m, key))
+                if first is None:
+                    first = cap
+                elif caps is None:
+                    caps = [first, cap]
+                else:
+                    caps.append(cap)
+        if caps is not None:
+            n_roots += _build_match_tree(out, caps, t_idx, t_depth, tag)
+        elif first is not None:
+            out.append((*first, t_idx, depth, tag))
+            n_roots += 1
+        if limit is not None and n_roots >= limit:
             break
 
 
-def _boundary_spans(rule: Rule, text: str, ts: int, te: int) -> list[tuple[int, int]]:
-    rx = _compiled(rule.pattern, rule.flags)
-    return [m.span() for m in _finditer(rx, text, ts, te)]
+def _boundary_spans(prog: _Program, text: str, ts: int, te: int) -> list[tuple[int, int]]:
+    return [m.span() for m in prog.rx.finditer(text, ts, te)]
 
 
-def _apply_split(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None:
+def _apply_split(out: list[SegRecord], prog: _Program, text: str, t_idx: int) -> None:
+    rule = prog.rule
     ts, te, _, _, t_depth, _ = out[t_idx]
     depth = t_depth + 1
 
@@ -147,7 +211,7 @@ def _apply_split(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> Non
         emit(ts, te, rule.desc)
         return
 
-    boundaries = _boundary_spans(rule, text, ts, te)
+    boundaries = _boundary_spans(prog, text, ts, te)
     if rule.limit is not None:
         boundaries = boundaries[: rule.limit]
 
@@ -186,14 +250,15 @@ def _apply_split(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> Non
         emit(ts, te, rule.desc)
 
 
-def _apply_gaps(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None:
+def _apply_gaps(out: list[SegRecord], prog: _Program, text: str, t_idx: int) -> None:
+    rule = prog.rule
     ts, te, _, _, t_depth, _ = out[t_idx]
     depth = t_depth + 1
 
     def emit(a: int, b: int) -> None:
         out.append((a, b, rule.desc, t_idx, depth, rule.tag))
 
-    non_gaps = _boundary_spans(rule, text, ts, te)
+    non_gaps = _boundary_spans(prog, text, ts, te)
     if not non_gaps:
         if ts < te:
             emit(ts, te)
@@ -216,7 +281,8 @@ def _apply_gaps(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None
         emit(last[1], te)
 
 
-def _apply_literal(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None:
+def _apply_literal(out: list[SegRecord], prog: _Program, text: str, t_idx: int) -> None:
+    rule = prog.rule
     ts, te, _, _, t_depth, _ = out[t_idx]
     i = ts
     while True:
@@ -228,24 +294,26 @@ def _apply_literal(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> N
         i = k
 
 
-def _apply_custom(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None:
+def _apply_custom(out: list[SegRecord], prog: _Program, text: str, t_idx: int) -> None:
     """User transform rule (Itorator.wrap surface): spans come back as
     (start, stop, desc) and are nested by the same sort+containment
-    pass as extract trees."""
+    pass as extract trees. Spans are clamped to the target first; what
+    is empty after clamping (incl. spans wholly outside it) is dropped."""
     ts, te, _, _, t_depth, _ = out[t_idx]
-    spans_keys = [
-        (max(ts, s0), min(te, s1), desc)
-        for s0, s1, desc in rule.fn(text, ts, te)
-        if s0 < s1
-    ]
-    _build_match_tree(out, spans_keys, t_idx, t_depth, rule.tag)
+    spans_keys = []
+    for s0, s1, desc in prog.rule.fn(text, ts, te):
+        s0, s1 = max(ts, s0), min(te, s1)
+        if s0 < s1:
+            spans_keys.append((s0, s1, desc))
+    _build_match_tree(out, spans_keys, t_idx, t_depth, prog.rule.tag)
 
 
-def _apply_literal_seq(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None:
+def _apply_literal_seq(out: list[SegRecord], prog: _Program, text: str, t_idx: int) -> None:
     """Sequential multi-substring form of ``Ito.from_substrings``
     (``ito.py:271-314``): each substring located after the previous
     one's end; stops at the first not found. Substrings travel joined
     with NUL (cannot appear in a str rule pattern)."""
+    rule = prog.rule
     ts, te, _, _, t_depth, _ = out[t_idx]
     i = ts
     for sub in rule.pattern.split("\x00"):
@@ -275,33 +343,33 @@ def segment_text(text: str, rules: RuleSet | Iterable[Rule]) -> list[SegRecord]:
     list (== per-document seg_id).
     """
     out: list[SegRecord] = [(0, len(text), ROOT, -1, 0, "$root")]
-    for rule in rules:
-        apply_fn = _APPLY[rule.kind]
+    for prog in _ruleset_program(rules)[0]:
+        on = prog.on
         # snapshot target indices BEFORE the rule runs (a rule never
         # applies to its own output)
-        targets = [i for i in range(len(out)) if rule.targets(out[i][2])]
+        if on is None:
+            targets = range(len(out))
+        else:
+            targets = [i for i, seg in enumerate(out) if seg[2] in on]
+        apply = prog.apply
         for t in targets:
-            if rule.kind == "extract" and rule.within_gaps_of is not None:
-                _apply_extract_in_gaps(out, rule, text, t)
-            else:
-                apply_fn(out, rule, text, t)
+            apply(out, prog, text, t)
     return out
 
 
-def _apply_extract_in_gaps(out: list[SegRecord], rule: Rule, text: str, t_idx: int) -> None:
+def _apply_extract_in_gaps(out: list[SegRecord], prog: _Program, text: str, t_idx: int) -> None:
     """Run the extract only on sub-ranges of the target not covered by a
     prior rule's direct children (``Rule.within_gaps_of``)."""
     ts, te = out[t_idx][0], out[t_idx][1]
-    covered = sorted(
-        (s[0], s[1]) for s in out if s[3] == t_idx and s[5] == rule.within_gaps_of
-    )
+    gap_tag = prog.rule.within_gaps_of
+    covered = sorted((s[0], s[1]) for s in out if s[3] == t_idx and s[5] == gap_tag)
     pos = ts
     for cs, ce in covered:
         if cs > pos:
-            _apply_extract(out, rule, text, t_idx, sub=(pos, min(cs, te)))
+            _apply_extract(out, prog, text, t_idx, sub=(pos, min(cs, te)))
         pos = max(pos, ce)
     if pos < te:
-        _apply_extract(out, rule, text, t_idx, sub=(pos, te))
+        _apply_extract(out, prog, text, t_idx, sub=(pos, te))
 
 
 def tree_indexes(segs: list[SegRecord]):
@@ -366,7 +434,7 @@ def append_segment_columns(
     stays offsets-only (zero-copy at rest).
     """
     segs = segment_text(text, rules)
-    value_descs = {d for r in rules for d in r.value_for}
+    materialize = value_descs(rules)
     paths, n_children, sibling_idx, dfs_idx = tree_indexes(segs)
     lo = 0 if include_root else 1
     n = len(segs)
@@ -390,7 +458,7 @@ def append_segment_columns(
         c_desc.append(desc)
         c_depth.append(depth)
         c_tag.append(rule_tag)
-        c_value.append(text[start:stop] if desc in value_descs else None)
+        c_value.append(text[start:stop] if desc in materialize else None)
     return k
 
 

@@ -1000,16 +1000,15 @@ def _bind_col(expr):
     if fn == "coalesce":
         return F.coalesce(*args)
     if fn in ("strbefore", "strafter"):
-        # separator pinned to a literal at parse time; absent -> ""
-        # (the SPARQL "" result; a NULL input stays the "" pin too)
+        # separator pinned to a literal at parse time; absent -> "" (the
+        # SPARQL result); an unbound input is an error, so it stays unbound
         s, sub = args[0], expr[2][1][1]
         pos = F.instr(s, sub)
         if fn == "strbefore":
-            return F.when(pos > 0, s.substr(F.lit(1), pos - 1)) \
-                .otherwise(F.lit(""))
-        return F.when(
-            pos > 0, s.substr(pos + len(sub), F.length(s))
-        ).otherwise(F.lit(""))
+            found = s.substr(F.lit(1), pos - 1)
+        else:
+            found = s.substr(pos + len(sub), F.length(s))
+        return F.when(s.isNull(), None).when(pos > 0, found).otherwise(F.lit(""))
     if fn == "replace":
         # SPARQL REPLACE is regex, global — Spark regexp_replace
         # matches; the DuckDB mirror needs the 'g' flag

@@ -169,43 +169,60 @@ def build_edges_fused(source: DataFrame, lang_rules=None) -> DataFrame:
     from typing import Iterator
 
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from pawpaw_spark.kernel import segment_text
+    from pawpaw_spark.kernel import segment_text, value_descs
     from pawpaw_spark.rulesets import LANG_RULES as _LR, TEXT_RULES as _TR
 
     lang_rules = lang_rules or _LR
+
+    def has_segment_batch(doc_ids: pa.Array, rows: list[int], segs: list) -> pa.RecordBatch:
+        """HAS_SEGMENT rows built column-wise by Arrow from the kept
+        segments and the input row each came from."""
+        did = doc_ids.take(pa.array(rows, pa.int32()))
+        start = pa.array([seg[0] for seg in segs], pa.int32())
+        stop = pa.array([seg[1] for seg in segs], pa.int32())
+        desc = pa.array([seg[2] for seg in segs], pa.string())
+        obj = pc.binary_join_element_wise(
+            did, "#", start.cast(pa.string()), "-", stop.cast(pa.string()), ":", desc, "")
+        return pa.RecordBatch.from_arrays(
+            [did, pa.repeat(pa.scalar("HAS_SEGMENT", pa.string()), len(rows)), obj, did,
+             start, stop],
+            names=_EDGE_COLS,
+        )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # mapInArrow, not mapInPandas: edge rows are built as arrow
         # arrays directly — the pandas object-array detour measured
         # ~20-25% slower end-to-end at this row volume
         for rb in batches:
+            # CONTAINS / DEFINES / REFERENCES rows, few: Python lists
             subj, pred, obj, doc, start, stop = [], [], [], [], [], []
 
             def emit(s, p, o, d, a, b):
                 subj.append(s); pred.append(p); obj.append(o)
                 doc.append(d); start.append(a); stop.append(b)
 
-            for repo, did, text, lang in zip(
+            # HAS_SEGMENT, ~93% of the rows: one per segment with a desc
+            seg_rows: list[int] = []
+            kept: list = []
+            for row, (repo, did, text, lang) in enumerate(zip(
                 rb.column(0).to_pylist(), rb.column(1).to_pylist(),
                 rb.column(2).to_pylist(), rb.column(3).to_pylist(),
-            ):
+            )):
                 emit(repo, "CONTAINS", did, did, None, None)
                 if text is None:
                     continue
                 rules = lang_rules.get(lang, _TR)
-                value_descs = {d for r in rules for d in r.value_for}
+                vdescs = value_descs(rules)  # cached on the RuleSet
                 segs = segment_text(text, rules)
-                names_by_parent: dict[int, list[str]] = {}
-                for a, b, desc, parent, _depth, _tag in segs[1:]:
-                    if desc == "def_name":
-                        names_by_parent.setdefault(parent, []).append(text[a:b])
-                for a, b, desc, parent, _depth, _tag in segs[1:]:
-                    if desc is None:
-                        continue
-                    emit(did, "HAS_SEGMENT", f"{did}#{a}-{b}:{desc}", did, a, b)
-                    if desc not in value_descs:
-                        continue
+                labeled = [seg for seg in segs[1:] if seg[2] is not None]
+                kept += labeled
+                seg_rows += [row] * len(labeled)
+                names_by_parent = None
+                for a, b, desc, parent, _depth, _tag in [
+                    seg for seg in labeled if seg[2] in vdescs
+                ]:
                     value = text[a:b]
                     if not value:
                         continue
@@ -216,6 +233,8 @@ def build_edges_fused(source: DataFrame, lang_rules=None) -> DataFrame:
                     elif desc == "call_name" and parent >= 0:
                         body = segs[parent]
                         if body[2] == "def_body":
+                            if names_by_parent is None:
+                                names_by_parent = _def_names_by_parent(segs, text)
                             for name in names_by_parent.get(body[3], ()):
                                 emit(f"sym:{name}", "REFERENCES", f"sym:{value}", did, a, b)
             if subj:
@@ -223,8 +242,10 @@ def build_edges_fused(source: DataFrame, lang_rules=None) -> DataFrame:
                     [pa.array(subj, pa.string()), pa.array(pred, pa.string()),
                      pa.array(obj, pa.string()), pa.array(doc, pa.string()),
                      pa.array(start, pa.int32()), pa.array(stop, pa.int32())],
-                    names=["subj", "pred", "obj", "doc_id", "start", "stop"],
+                    names=_EDGE_COLS,
                 )
+            if kept:
+                yield has_segment_batch(rb.column(1), seg_rows, kept)
 
     src = source.select(
         F.col("repo").alias("__repo"),
@@ -239,6 +260,15 @@ def build_edges_fused(source: DataFrame, lang_rules=None) -> DataFrame:
     return src.mapInArrow(
         run, schema="subj string, pred string, obj string, doc_id string, start int, stop int"
     )
+
+
+def _def_names_by_parent(segs, text: str) -> dict[int, list[str]]:
+    """def_name texts keyed by their parent (the def_block) segment."""
+    names: dict[int, list[str]] = {}
+    for a, b, desc, parent, _depth, _tag in segs[1:]:
+        if desc == "def_name":
+            names.setdefault(parent, []).append(text[a:b])
+    return names
 
 
 def _node_kind(c):

@@ -45,8 +45,17 @@ class BoundaryRetention(enum.Enum):
     ALL = "all"
 
 
+class _KernelCached:
+    """Pickles without ``_kernel``, the compiled form
+    :mod:`pawpaw_spark.kernel` caches on the instance: it is rebuilt in
+    whichever process runs the rules, never shipped."""
+
+    def __getstate__(self):
+        return {k: v for k, v in self.__dict__.items() if k != "_kernel"}
+
+
 @dataclass(frozen=True)
-class Rule:
+class Rule(_KernelCached):
     kind: str                       # 'extract' | 'split' | 'gaps' | 'literal' | 'custom'
     tag: str                        # rule_tag stamped on emitted segments
     pattern: str                    # regex source (or substring for 'literal')
@@ -182,7 +191,7 @@ def literal(
 
 
 @dataclass(frozen=True)
-class RuleSet:
+class RuleSet(_KernelCached):
     """An ordered rule program. Rules run in order; each applies to the
     segments present at that point whose desc matches ``on``."""
 

@@ -918,6 +918,18 @@ class TestRound5Extensions:
             ("plain", "", "", "pl__n"),
         }
 
+    def test_strbefore_strafter_unbound_input_stays_unbound(self, spark):
+        rows = [("a", "DEFINES", "mod.fn"), ("b", "DEFINES", "plain"),
+                ("mod.fn", "DOC", "x.y")]
+        got = _t(sparql(_triples(spark, rows), """
+            SELECT ?s ?p ?a WHERE {
+              ?x DEFINES ?s .
+              OPTIONAL { ?s DOC ?d }
+              BIND ( STRBEFORE ( ?d "." ) AS ?p )
+              BIND ( STRAFTER ( ?d "." ) AS ?a )
+            }"""))
+        assert got == {("mod.fn", "x", "y"), ("plain", None, None)}
+
     def test_exists_in_construct_raises(self, spark):
         with pytest.raises(ValueError, match="CONSTRUCT"):
             sparql(_triples(spark, KG), """

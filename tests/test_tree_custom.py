@@ -50,6 +50,23 @@ class TestCustomRule:
         uppers = [(s, e) for s, e, d, *_ in segs if d == "upper"]
         assert uppers == [(0, 2), (6, 8)]
 
+    def test_spans_clamped_before_empty_ones_drop(self):
+        def overreach(text, start, stop):
+            yield (start, stop, "inside")
+            yield (stop + 2, stop + 5, "outside")  # wholly past the target
+            yield (stop - 1, stop + 3, "straddle")  # clamps to (stop-1, stop)
+
+        rules = RuleSet.of(
+            split(r" ", desc="part", tag="part"),
+            custom(overreach, on="part", tag="c"),
+        )
+        assert segment_text("ab cd", rules)[3:] == [
+            (0, 2, "inside", 1, 2, "c"),
+            (1, 2, "straddle", 3, 3, "c"),
+            (3, 5, "inside", 2, 2, "c"),
+            (4, 5, "straddle", 5, 3, "c"),
+        ]
+
 
 @pytest.fixture(scope="module")
 def segs(spark):
