@@ -2763,10 +2763,10 @@ def q_kg_path_closure(spark, sf_dir):
     (``CHILD_OF*`` — reflexive-transitive, so the zero-length
     identity over the GRAPH's term universe, including the 'leaf'
     tag object, is part of the semantics): per ancestor-or-self node,
-    the count of descendants-or-self. The closure is the semi-naive
-    delta loop of graph_query._closure (new pairs only per round,
-    rounds = tree depth); the oracle is the recursive-CTE ancestor
-    set unioned with the identity over all graph terms."""
+    the count of descendants-or-self. The closure is
+    graph_query._closure run by session.semi_naive (new pairs only per
+    round, rounds = tree depth); the oracle is the recursive-CTE
+    ancestor set unioned with the identity over all graph terms."""
     from pawpaw_spark.operators.graph_query import match_pattern
 
     out = match_pattern(

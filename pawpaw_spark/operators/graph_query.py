@@ -85,12 +85,13 @@ def _is_path(term: str | None) -> bool:
 # Compilation is closed over (src, dst) pair tables: every node is a
 # declarative DataFrame op (filter / join / union / distinct), so the
 # whole path plan stays inside Catalyst. '+' is the only iterative
-# form — a semi-naive transitive closure (delta ∘ base per round, new
-# pairs only), each round one equi-join + one anti-join under
-# fixpoint_loop_conf, checkpoint-truncated lineage. rounds needed =
-# the graph's HOP DIAMETER along that predicate; ``square=True``
-# switches to recursive doubling (R ∘ R), ceil(log2(diameter)) rounds
-# at a heavier per-round join, for deep-chain graphs.
+# form — a semi-naive transitive closure (_closure: delta ∘ base per
+# round, new pairs only), each round one equi-join + one anti-join
+# under fixpoint_loop_conf, checkpoint-truncated lineage. rounds
+# needed = the graph's HOP DIAMETER along that predicate;
+# ``square=True`` switches to recursive doubling (delta ∘ R),
+# ceil(log2(diameter)) rounds at a heavier per-round join, for
+# deep-chain graphs.
 # --------------------------------------------------------------------
 
 
@@ -208,110 +209,61 @@ def _pairs_distinct(df: DataFrame) -> DataFrame:
     return df.select("src", "dst").distinct()
 
 
-def _closure(base: DataFrame, max_rounds: int, square: bool) -> DataFrame:
-    """Transitive closure of a (src, dst) pair table, new-pairs-only
-    per round (semi-naive). ``square=False``: delta ∘ base, rounds =
-    hop diameter, total join work O(|closure| * avg_out_degree) — the
-    optimal incremental cost. ``square=True``: R ∘ R recursive
-    doubling, ceil(log2(diameter)) rounds for deep chains. Raises on
-    non-convergence within ``max_rounds`` (the canon.py discipline:
-    a silent truncation would return wrong answers, not slow ones)."""
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
+def _closure(
+    base: DataFrame,
+    max_rounds: int,
+    square: bool,
+    key: Sequence[str] = (),
+    init=None,
+) -> DataFrame:
+    """Transitive closure of a (``*key``, src, dst) pair table, new
+    pairs only per round (semi-naive, :func:`pawpaw_spark.session.
+    semi_naive`). ``square=False``: delta ∘ base, rounds = hop
+    diameter, total join work O(|closure| * avg_out_degree) — the
+    optimal incremental cost. ``square=True``: delta ∘ closure-so-far
+    (recursive doubling), ceil(log2(diameter)) rounds for deep chains.
 
-    base = _pairs_distinct(base).persist()
+    ``key`` columns partition the closure: pairs only compose within a
+    key (every predicate of a keyed table closes in ONE fixpoint).
+    ``init``, a filter Column over ``base``, seeds the state with the
+    rows it keeps instead of all of ``base``. ``src == seed`` is the
+    anchored frontier: the pairs (seed, dst) for every dst reachable in
+    >= 1 step, with O(|reachable|) per-round state, never the full
+    closure, and rounds = the hop radius from the seed. A seeded
+    closure cannot double (seed pairs only compose with base pairs), so
+    ``square=True`` callers use the full closure instead."""
+    from pawpaw_spark.session import (
+        fixpoint_loop_conf,
+        semi_naive,
+        truncated_checkpoint,
+    )
+
+    cols = [*key, "src", "dst"]
+    base = base.select(*cols).distinct().persist()
     try:
         n_base = base.count()  # materializes; sizes the loop width
         with fixpoint_loop_conf(base.sparkSession, approx_state_rows=n_base):
-            reach = truncated_checkpoint(base)
-            delta = reach
-            for r in range(max_rounds):
-                if square:
-                    step = delta.alias("d").join(
-                        reach.alias("b"),
-                        F.col("d.dst") == F.col("b.src"),
-                    )
-                else:
-                    step = delta.alias("d").join(
-                        base.alias("b"), F.col("d.dst") == F.col("b.src")
-                    )
-                delta = truncated_checkpoint(
-                    step.select(
-                        F.col("d.src").alias("src"), F.col("b.dst").alias("dst")
-                    )
-                    .distinct()
-                    .join(reach, ["src", "dst"], "left_anti")
-                )
-                if delta.isEmpty():
-                    return reach
-                # lazy union of checkpointed deltas: each pair is
-                # materialized exactly once (the reachability() pattern)
-                reach = reach.union(delta)
-                if square:
-                    reach = truncated_checkpoint(reach.distinct())
-                elif (r + 1) % 4 == 0:
-                    # compact the growing union-of-parts: round r scans
-                    # r checkpointed deltas per join otherwise — O(D^2)
-                    # task fan-out over a D-round closure. Rewriting the
-                    # accumulated state every 4 rounds bounds the part
-                    # count at 4 for ~state/4 amortized extra writes
-                    reach = truncated_checkpoint(reach)
-        raise RuntimeError(
-            f"path closure did not converge in {max_rounds} rounds; "
-            "raise max_rounds (rounds needed = hop diameter, or "
-            "log2(diameter) with square=True)"
-        )
-    finally:
-        base.unpersist()
-
-
-def _reachable_from(base: DataFrame, seed: str, max_rounds: int) -> DataFrame:
-    """Nodes reachable from ``seed`` in >= 1 step over a (src, dst)
-    pair table -> (src=seed, dst) rows. The seeded semi-naive frontier:
-    per-round state is O(|reachable|), never the full closure — the
-    O(reachable) vs O(closure) separation that makes constant-anchored
-    ``+``/``*`` paths viable at KG scale."""
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
-
-    base = _pairs_distinct(base).persist()
-    try:
-        n_base = base.count()
-        with fixpoint_loop_conf(base.sparkSession, approx_state_rows=n_base):
-            frontier = truncated_checkpoint(
-                base.filter(F.col("src") == seed).select("dst").distinct()
+            reach = truncated_checkpoint(
+                base if init is None else base.filter(init)
             )
-            reached = frontier
 
-            def done():
-                return reached.select(
-                    F.lit(seed).alias("src"), F.col("dst")
+            def step(delta, facts, _r):
+                right = facts if square else base
+                on = [F.col(f"d.{k}") == F.col(f"b.{k}") for k in key]
+                return delta.alias("d").join(
+                    right.alias("b"), on + [F.col("d.dst") == F.col("b.src")]
+                ).select(
+                    *[F.col(f"d.{k}") for k in key],
+                    F.col("d.src").alias("src"),
+                    F.col("b.dst").alias("dst"),
                 )
 
-            # emptiness is checked AFTER each expansion (the _closure
-            # discipline), so max_rounds EXPANSIONS are allowed and a
-            # reachable set of hop radius == max_rounds still converges
-            # — checking before would raise one round early.
-            if frontier.isEmpty():
-                return done()
-            for r in range(max_rounds):
-                frontier = truncated_checkpoint(
-                    frontier.alias("f")
-                    .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
-                    .select(F.col("b.dst").alias("dst"))
-                    .distinct()
-                    .join(reached, ["dst"], "left_anti")
-                )
-                if frontier.isEmpty():
-                    return done()
-                reached = reached.union(frontier)
-                if (r + 1) % 4 == 0:
-                    # compact the union-of-checkpointed-deltas (the
-                    # _closure discipline): bounds part fan-out at 4
-                    reached = truncated_checkpoint(reached)
-        raise RuntimeError(
-            f"anchored path closure did not converge in {max_rounds} "
-            "rounds; raise max_rounds (rounds needed = reachable-set "
-            "hop radius from the anchor)"
-        )
+            reach, _ = semi_naive(
+                reach, reach, step, cols, max_rounds, "transitive closure",
+                "rounds needed = hop diameter, or log2(diameter) with "
+                "square=True; from an anchor, its hop radius",
+            )
+            return reach
     finally:
         base.unpersist()
 
@@ -413,17 +365,18 @@ def path_pairs(
             a_src is not None or a_dst is not None
         ):
             base = compile_(node[1])
-            if a_src is not None:
-                seeded = _reachable_from(base, a_src, max_rounds)
-                anchor = a_src
-            else:
-                rev = base.select(
+            anchor = a_src if a_src is not None else a_dst
+            if a_src is None:
+                base = base.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
-                seeded = _reachable_from(rev, a_dst, max_rounds).select(
+            seeded = _closure(
+                base, max_rounds, False, init=F.col("src") == anchor
+            )
+            if a_src is None:
+                seeded = seeded.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
-                anchor = a_dst
             if node[0] == "star":
                 # zero-length pair (a, a) iff a is a term of the graph
                 ident = nodes().filter(F.col("src") == anchor)

@@ -22,7 +22,8 @@ rewrite (Abiteboul/Hull/Vianu ch. 13; see PAPERS.md Datalog entries):
 * every variant is a greedy-connected tree of equi-joins compiled by
   the same slice machinery as :mod:`graph_query` (constants push to
   the scan, Catalyst owns the physical strategy);
-* new facts are deduped against the accumulated set with one anti-join
+* the loop itself is :func:`pawpaw_spark.session.semi_naive`: new
+  facts are deduped against the accumulated set with one anti-join
   (set semantics), checkpoint-truncated per round, and the loop runs
   under ``fixpoint_loop_conf`` — shuffle width sized to the DELTA, AQE
   off inside the loop (the iterative-graph discipline; the deltas are
@@ -317,6 +318,28 @@ def _project_head(bindings: DataFrame, head: Triple) -> DataFrame:
     ).distinct()
 
 
+def _variants(
+    rec: list[tuple[NormRule, Sequence[int]]],
+    delta: DataFrame,
+    facts: DataFrame,
+    frozen: DataFrame,
+    allow_product: bool,
+) -> DataFrame | None:
+    """One semi-naive round's candidate facts: per rule, one variant
+    per listed body position with THAT atom read from the delta and
+    the rest from the full facts; negated atoms always probe the
+    ``frozen`` set. ``None`` when no position is listed (nothing can
+    fire)."""
+    out = None
+    for (head, body, neg), positions in rec:
+        for i in positions:
+            sources = [delta if j == i else facts for j in range(len(body))]
+            b = _eval_body(sources, body, allow_product)
+            derived = _project_head(_apply_neg(b, neg, frozen), head)
+            out = derived if out is None else out.union(derived)
+    return out
+
+
 def infer(
     edges: DataFrame,
     rules: Sequence[Rule],
@@ -371,7 +394,11 @@ def infer(
     """
     normed = _normalize_rules(rules)
     strata = _stratify(normed)
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
+    from pawpaw_spark.session import (
+        fixpoint_loop_conf,
+        semi_naive,
+        truncated_checkpoint,
+    )
 
     key = ["subj", "pred", "obj"]
     base = (
@@ -397,78 +424,31 @@ def infer(
                         for rule in sub
                     ]
                     rec = [(r, pos) for r, pos in rec if pos]
-                    # round 1: naive evaluation over the frozen facts
-                    first = None
-                    for head, body, neg in sub:
-                        b = _eval_body(
-                            [frozen] * len(body), body, allow_product
-                        )
-                        derived = _project_head(
-                            _apply_neg(b, neg, frozen), head
-                        )
-                        first = (
-                            derived if first is None else first.union(derived)
-                        )
+                    # round 1: naive evaluation, every atom over the
+                    # frozen facts (one variant per rule, delta = facts)
+                    first = _variants(
+                        [(rule, [0]) for rule in sub],
+                        frozen, frozen, frozen, allow_product,
+                    )
                     delta = truncated_checkpoint(
                         first.distinct().join(frozen, key, "left_anti")
                     )
-                    acc_s = delta
-                    facts = frozen.union(delta)  # lazy checkpointed parts
-                    converged = delta.isEmpty()
-                    if not converged and not rec:
-                        # no rule in this SCC can consume its own
-                        # output: one naive pass IS the fixpoint
-                        converged = True
-                    if not converged:
-                        for r in range(max_rounds - 1):
-                            nxt = None
-                            # one variant per RECURSIVE body atom: that
-                            # atom from the delta, the rest full — atoms
-                            # over base/lower relations are frozen for
-                            # the whole loop, so a delta variant there
-                            # could never match (the delta holds only
-                            # this SCC's derived predicates); the
-                            # negated atoms always probe the FROZEN set
-                            for (head, body, neg), positions in rec:
-                                for i in positions:
-                                    sources = [
-                                        delta if j == i else facts
-                                        for j in range(len(body))
-                                    ]
-                                    b = _eval_body(
-                                        sources, body, allow_product
-                                    )
-                                    derived = _project_head(
-                                        _apply_neg(b, neg, frozen), head
-                                    )
-                                    nxt = (
-                                        derived
-                                        if nxt is None
-                                        else nxt.union(derived)
-                                    )
-                            delta = truncated_checkpoint(
-                                nxt.distinct().join(facts, key, "left_anti")
-                            )
-                            if delta.isEmpty():
-                                converged = True
-                                break
-                            acc_s = acc_s.union(delta)
-                            facts = facts.union(delta)
-                            if (r + 1) % 4 == 0:
-                                # compact the union-of-checkpointed-
-                                # deltas: facts is scanned 2-3x per
-                                # round (delta variants + anti-join),
-                                # and a D-round fixpoint otherwise
-                                # fans out O(D^2) part-scan tasks.
-                                # Rewriting every 4 rounds bounds the
-                                # part count for ~state/4 amortized
-                                # extra writes
-                                facts = truncated_checkpoint(facts)
-                    if not converged:
-                        raise RuntimeError(
-                            f"Datalog fixpoint did not converge in "
-                            f"{max_rounds} rounds (per stratum); raise "
-                            "max_rounds (rounds needed = derivation depth)"
+                    facts, acc_s = frozen.union(delta), delta
+                    # no rule in this SCC consuming its own output: one
+                    # naive pass IS the fixpoint. Otherwise one variant
+                    # per RECURSIVE body atom: atoms over base/lower
+                    # relations are frozen for the whole loop, so a
+                    # delta variant there could never match (the delta
+                    # holds only this SCC's derived predicates)
+                    if rec and not delta.isEmpty():
+                        facts, acc_s = semi_naive(
+                            facts, delta,
+                            lambda d, f, _r: _variants(
+                                rec, d, f, frozen, allow_product
+                            ),
+                            key, max_rounds, "Datalog fixpoint",
+                            "per stratum; rounds needed = derivation depth",
+                            start=1,
                         )
                     frozen = facts
                     derived_acc = (
@@ -522,7 +502,11 @@ def infer_delta(
             "only: negation makes additions non-monotone (a new base "
             "fact can retract derived facts); re-run infer() instead"
         )
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
+    from pawpaw_spark.session import (
+        fixpoint_loop_conf,
+        semi_naive,
+        truncated_checkpoint,
+    )
 
     key = ["subj", "pred", "obj"]
 
@@ -533,72 +517,36 @@ def infer_delta(
             F.col(obj_col).cast("string").alias("obj"),
         )
 
+    # round 1's delta is the seeded BASE facts, so every body atom can
+    # match it; from round 2 the delta holds only DERIVED facts (rule
+    # heads), so variants are needed only at atoms over derived
+    # predicates or wildcards — infer()'s _recursive_atoms pruning,
+    # shifted one round. A program with no such atom is done after
+    # round 1 (the step returns None)
+    heads = {head[1] for head, _, _ in normed}
+    every = [(rule, range(len(rule[1]))) for rule in normed]
+    pruned = [(rule, _recursive_atoms(rule, heads)) for rule in normed]
+    pruned = [(rule, pos) for rule, pos in pruned if pos]
+
     old = canon(base).union(canon(derived)).distinct().persist()
     spark = base.sparkSession
     try:
         n_old = old.count()  # materializes the cache; sizes the loop
         with fixpoint_loop_conf(spark, approx_state_rows=n_old):
-            delta = truncated_checkpoint(
-                canon(delta_base).distinct().join(old, key, "left_anti")
-            )
-            new_acc = delta
-            facts = old.union(delta)
+            added = canon(delta_base).distinct()
+            delta = truncated_checkpoint(added.join(old, key, "left_anti"))
             if delta.isEmpty():
                 return delta
-            # round 1's delta is the seeded BASE facts, so every body
-            # atom can match it; from round 2 the delta holds only
-            # DERIVED facts (rule heads), so variants are needed only
-            # at atoms over derived predicates or wildcards — the same
-            # pruning as infer()'s _recursive_atoms, shifted one round
-            heads = {head[1] for head, _, _ in normed}
-            first_round = True
-            for r in range(max_rounds):
-                nxt = None
-                for head, body, _neg in normed:
-                    for i in range(len(body)):
-                        p_i = body[i][1]
-                        if not first_round and not (
-                            p_i is None or p_i in heads
-                        ):
-                            continue
-                        sources = [
-                            delta if j == i else facts
-                            for j in range(len(body))
-                        ]
-                        derived_new = _project_head(
-                            _eval_body(sources, body, allow_product), head
-                        )
-                        nxt = (
-                            derived_new
-                            if nxt is None
-                            else nxt.union(derived_new)
-                        )
-                first_round = False
-                if nxt is None:
-                    # every variant pruned: no rule consumes a derived
-                    # predicate (non-recursive program) — round 1 was
-                    # the whole derivation cone
-                    return new_acc.join(
-                        canon(delta_base).distinct(), key, "left_anti"
-                    )
-                delta = truncated_checkpoint(
-                    nxt.distinct().join(facts, key, "left_anti")
-                )
-                if delta.isEmpty():
-                    # the seeded delta_base rows are base facts, not
-                    # derived ones: report only genuinely derived adds
-                    return new_acc.join(
-                        canon(delta_base).distinct(), key, "left_anti"
-                    )
-                new_acc = new_acc.union(delta)
-                facts = facts.union(delta)
-                if (r + 1) % 4 == 0:
-                    # bound the union-of-parts (see infer()'s loop)
-                    facts = truncated_checkpoint(facts)
-        raise RuntimeError(
-            f"incremental fixpoint did not converge in {max_rounds} "
-            "rounds; raise max_rounds (rounds needed = the delta's "
-            "derivation depth)"
-        )
+            _, new = semi_naive(
+                old.union(delta), delta,
+                lambda d, f, r: _variants(
+                    pruned if r else every, d, f, f, allow_product
+                ),
+                key, max_rounds, "incremental fixpoint",
+                "rounds needed = the delta's derivation depth",
+            )
+            # the seeded delta_base rows are base facts, not derived
+            # ones: report only genuinely derived adds
+            return new.join(added, key, "left_anti")
     finally:
         old.unpersist()

@@ -18,9 +18,10 @@ The saturation equals the ORDERED composition ``T(C(T(base)))``:
   set is closed under composition DRIVER-SIDE (schema is metadata,
   the group is tiny). One broadcast join applies all of them at once.
 * ``C`` transitively closes the slices of predicates DECLARED
-  transitive — all predicates in ONE keyed semi-naive fixpoint
-  (delta-joins-base per round under fixpoint_loop_conf, eager
-  truncated checkpoints, raise on non-convergence).
+  transitive — all predicates in ONE fixpoint, the closure keyed on
+  the predicate (:func:`pawpaw_spark.operators.graph_query._closure`
+  with ``key=("pred",)``, run by :func:`pawpaw_spark.session.
+  semi_naive`).
 
 Why that ordering is the fixpoint: transforms are bijections on edge
 sets that rename predicates and/or reverse direction, and transitive
@@ -44,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pawpaw_spark.operators.graph_query import _closure
 
 VOCAB_SYMMETRIC = "SymmetricProperty"
 VOCAB_TRANSITIVE = "TransitiveProperty"
@@ -79,54 +82,6 @@ def close_transforms(
         if not new:
             return {(p, q, f) for (p, q, f) in closed if not (p == q and not f)}
         closed |= new
-
-
-def _keyed_closure(edges: DataFrame, max_rounds: int) -> DataFrame:
-    """Transitive closure of a (pred, subj, obj) table, every predicate
-    in the SAME semi-naive fixpoint (per round: one (pred, obj=subj)
-    equi-join of the delta against the base + one anti-join; eager
-    truncated checkpoints; raises on non-convergence — the _closure
-    discipline, keyed)."""
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
-
-    base = edges.select("pred", "subj", "obj").distinct().persist()
-    try:
-        n_base = base.count()
-        with fixpoint_loop_conf(base.sparkSession, approx_state_rows=n_base):
-            reach = truncated_checkpoint(base)
-            delta = reach
-            for r in range(max_rounds):
-                step = delta.alias("d").join(
-                    base.alias("b"),
-                    (F.col("d.pred") == F.col("b.pred"))
-                    & (F.col("d.obj") == F.col("b.subj")),
-                )
-                delta = truncated_checkpoint(
-                    step.select(
-                        F.col("d.pred").alias("pred"),
-                        F.col("d.subj").alias("subj"),
-                        F.col("b.obj").alias("obj"),
-                    )
-                    .distinct()
-                    .join(reach, ["pred", "subj", "obj"], "left_anti")
-                )
-                if delta.isEmpty():
-                    # positional-union safety: callers union this with
-                    # (subj, pred, obj)-ordered frames
-                    return reach.select("subj", "pred", "obj")
-                reach = reach.union(delta)
-                if (r + 1) % 4 == 0:
-                    # bound the union-of-checkpointed-parts the round's
-                    # anti-join rescans (the graph_query._closure
-                    # compaction discipline)
-                    reach = truncated_checkpoint(reach)
-        raise RuntimeError(
-            f"transitive saturation did not converge in {max_rounds} "
-            "rounds; raise max_rounds (rounds needed = the longest "
-            "transitive predicate's hop diameter)"
-        )
-    finally:
-        base.unpersist()
 
 
 def owl_property_closure(
@@ -190,8 +145,16 @@ def owl_property_closure(
 
     expanded = apply_t(inst)
     if trans:
-        closed_slices = _keyed_closure(
-            expanded.filter(F.col("pred").isin(*sorted(trans))), max_rounds
+        closed_slices = _closure(
+            expanded.filter(F.col("pred").isin(*sorted(trans))).select(
+                "pred", F.col("subj").alias("src"), F.col("obj").alias("dst")
+            ),
+            max_rounds,
+            False,
+            key=("pred",),
+        ).select(
+            # positional-union safety: (subj, pred, obj) like expanded
+            F.col("src").alias("subj"), "pred", F.col("dst").alias("obj")
         )
         expanded = (
             expanded.filter(~F.col("pred").isin(*sorted(trans)))

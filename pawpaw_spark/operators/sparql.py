@@ -39,8 +39,9 @@ see the parser doc for the exact token rules):
   ``{ group } UNION { group } [UNION { group } ...]``
 * group body: triples terminated by ``.``; ``OPTIONAL { ... }``;
   ``FILTER NOT EXISTS { ... }``; ``FILTER EXISTS { ... }`` (a SEMI
-  join on the shared variables — the dual of NOT EXISTS; uncorrelated
-  = a <=1-row broadcast ASK gate); ``MINUS { ... }`` (anti-join on the
+  join on the shared variables — the dual of NOT EXISTS; on the bound
+  ones only where an OPTIONAL left some unbound; uncorrelated = a
+  <=1-row broadcast ASK gate); ``MINUS { ... }`` (anti-join on the
   shared variables; an uncorrelated group is a no-op per SPARQL's
   disjoint-domain rule); ``FILTER ( a op b )`` with op ``=`` ``!=``
   ``<`` ``<=`` ``>`` ``>=`` over ?vars, constants, and parenthesized
@@ -112,6 +113,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pawpaw_spark.operators.graph_query import (
+    _vars_of,
     construct,
     match_pattern,
     match_quads,
@@ -1057,6 +1059,41 @@ def _filter_cond(a, op: str, b):
     return getattr(side(a), _CMP_OPS[op])(side(b))
 
 
+def _filter_exists(
+    m: DataFrame, inner: DataFrame, required: set[str]
+) -> DataFrame:
+    """Positive FILTER EXISTS: keep the solutions of ``m`` for which
+    the inner pattern, with the row's BOUND variables substituted,
+    has a match. A row whose shared variables are all bound is a SEMI
+    join on them (the dual of the NOT EXISTS anti join); an unbound
+    (NULL) shared variable stays free in the inner pattern, so such a
+    row semi-joins on its bound subset only, and with none bound meets
+    the uncorrelated ASK gate: a <=1-row broadcast probe, never a
+    data-sized product. ``required`` names the variables no row leaves
+    unbound (the group's required triples); rows split by which of the
+    other shared variables are bound — one branch when there are
+    none."""
+    shared = [c for c in inner.columns if c in m.columns]
+    nullable = [c for c in shared if c not in required]
+    out = None
+    for mask in range(1 << len(nullable)):
+        unbound = {c for i, c in enumerate(nullable) if mask >> i & 1}
+        part = m
+        for c in nullable:
+            part = part.filter(
+                F.col(c).isNull() if c in unbound else F.col(c).isNotNull()
+            )
+        on = [c for c in shared if c not in unbound]
+        if on:
+            part = part.join(inner.select(*on).distinct(), on=on, how="semi")
+        else:
+            probe = inner.limit(1).select(F.lit(1).alias("__exists"))
+            part = part.crossJoin(F.broadcast(probe)).drop("__exists")
+        # by name: a USING join leads with its key columns
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
 def _branch_frame(
     edges: DataFrame,
     b: dict,
@@ -1119,26 +1156,17 @@ def _branch_frame(
             )
         m = m.withColumn(v, _bind_col(expr))
     for ex in b.get("exists", ()):
-        # positive FILTER EXISTS: a SEMI join of the solutions against
-        # the inner pattern's bindings on the shared variables — the
-        # dual of the NOT EXISTS anti join. An uncorrelated EXISTS is
-        # an ASK gate: a <=1-row broadcast probe (never a data-sized
-        # product). Evaluated AFTER BIND (SPARQL's end-of-group filter
-        # scope), so an EXISTS correlated on a BIND-introduced
-        # variable is a real per-row semi join, not a degenerate gate.
+        # positive FILTER EXISTS, evaluated AFTER BIND (SPARQL's
+        # end-of-group filter scope), so an EXISTS correlated on a
+        # BIND-introduced variable is a real per-row semi join, not a
+        # degenerate gate
         if b.get("graph") is not None:
             raise ValueError(
                 "FILTER EXISTS inside a GRAPH block is not supported"
             )
         inner = match_pattern(edges, ex, distinct=True, **match_kwargs)
-        shared = [c for c in inner.columns if c in m.columns]
-        if shared:
-            m = m.join(
-                inner.select(*shared).distinct(), on=shared, how="semi"
-            )
-        else:
-            probe = inner.limit(1).select(F.lit(1).alias("__exists"))
-            m = m.crossJoin(F.broadcast(probe)).drop("__exists")
+        required = set().union(*map(_vars_of, b["pattern"]))
+        m = _filter_exists(m, inner, required)
     for a, op, bb in b.get("filters", ()):
         for s in (a, bb):
             missing = sorted(_expr_vars(s) - set(m.columns))

@@ -168,3 +168,51 @@ def fixpoint_loop_conf(spark, approx_state_rows: int | None = None,
     finally:
         conf.set("spark.sql.shuffle.partitions", old_sp)
         conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def semi_naive(facts, delta, step, key, max_rounds: int, name: str,
+               hint: str, start: int = 0):
+    """Semi-naive fixpoint loop -> ``(facts, new)``: the saturated fact
+    set and the rows added since ``delta`` (``delta`` included), each a
+    lazy union of checkpointed parts.
+
+    ``facts`` is the materialized state and already contains ``delta``,
+    the rows new in the last round. Round ``r`` (``start`` up to
+    ``max_rounds - 1``; ``start`` counts rounds the caller already ran,
+    e.g. a naive first round) calls ``step(delta, facts, r)`` for the
+    candidate rows, or ``None`` when no rule can fire. Candidates are
+    deduped on ``key`` and anti-joined against ``facts``; what is left
+    is checkpointed (:func:`truncated_checkpoint`) and becomes the next
+    delta, and an empty delta is the fixpoint. Run it inside
+    :func:`fixpoint_loop_conf`.
+
+    Non-convergence raises: a silent truncation would return wrong
+    answers, not slow ones. ``name`` and ``hint`` (what sets the round
+    count) make the message the caller's own.
+    """
+    key = list(key)
+    new = delta
+    for r in range(start, max_rounds):
+        cand = step(delta, facts, r)
+        if cand is None:
+            return facts, new
+        delta = truncated_checkpoint(
+            cand.distinct().join(facts, key, "left_anti")
+        )
+        if delta.isEmpty():
+            return facts, new
+        # lazy union of checkpointed deltas: each row is materialized
+        # exactly once
+        facts = facts.union(delta)
+        new = new.union(delta)
+        if (r + 1) % 4 == 0:
+            # compact the growing union-of-parts: round r scans r
+            # checkpointed deltas per join otherwise — O(D^2) task
+            # fan-out over a D-round fixpoint. Rewriting the state every
+            # 4 rounds bounds the part count at 4 for ~state/4 amortized
+            # extra writes
+            facts = truncated_checkpoint(facts)
+    raise RuntimeError(
+        f"{name} did not converge in {max_rounds} rounds; "
+        f"raise max_rounds ({hint})"
+    )

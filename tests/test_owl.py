@@ -194,16 +194,6 @@ class TestOwlClosure:
         got = _spark_sat(spark, base)
         assert got == {("o", "q", "s")}
 
-    def test_nonconvergence_raises(self, spark):
-        base = [
-            ("a", "within", "b"),
-            ("b", "within", "c"),
-            ("c", "within", "d"),
-            ("d", "within", "e"),
-        ] + SCHEMA_TRANS
-        with pytest.raises(RuntimeError, match="did not converge"):
-            owl_property_closure(_df(spark, base), max_rounds=1).count()
-
 
 # ------------------------------------------------------ functional rules
 class TestFunctionalSameAs:

@@ -130,11 +130,6 @@ class TestPathPairs:
         }
         assert got == py_path(chain, ("plus", ("pred", "E")))
 
-    def test_nonconvergence_raises(self, spark):
-        chain = [(f"n{i}", "E", f"n{i+1}") for i in range(10)]
-        with pytest.raises(RuntimeError, match="converge"):
-            path_pairs(edges_df(spark, chain), "E+", max_rounds=3).collect()
-
     @settings(max_examples=15, deadline=None)
     @given(
         edges=st.lists(
@@ -311,11 +306,6 @@ class TestInfer:
             infer(e, [(("?x", "D", "?y"), [("?x", "E+", "?y")])])
         with pytest.raises(ValueError, match="body predicate variables"):
             infer(e, [(("?x", "D", "?y"), [("?x", "?p", "?y")])])
-
-    def test_nonconvergence_raises(self, spark):
-        chain = [(f"n{i}", "E", f"n{i+1}") for i in range(9)]
-        with pytest.raises(RuntimeError, match="converge"):
-            infer(edges_df(spark, chain), TC_RULES, max_rounds=3)
 
     @settings(max_examples=10, deadline=None)
     @given(

@@ -969,6 +969,26 @@ class TestRound5Extensions:
             }"""))
         assert got == {("A",)}
 
+    def test_exists_with_optional_unbound_shared_variable(self, spark):
+        # SPARQL substitutes only BOUND variables into the EXISTS
+        # pattern: an OPTIONAL-unbound ?x stays free, so the row
+        # survives iff any P edge exists at all; a bound ?x still
+        # correlates per row.
+        rows = [
+            ("a", "KIND", "T"), ("b", "KIND", "T"), ("c", "KIND", "T"),
+            ("b", "Q", "x1"), ("c", "Q", "x2"), ("x1", "P", "y"),
+        ]
+        q = """
+            SELECT ?s ?x WHERE {
+              ?s KIND T .
+              OPTIONAL { ?s Q ?x }
+              FILTER EXISTS { ?x %s ?y }
+            }"""
+        got = _t(sparql(_triples(spark, rows), q % "P"))
+        assert got == {("a", None), ("b", "x1")}
+        # no edge of the predicate: the unbound row fails the gate too
+        assert _t(sparql(_triples(spark, rows), q % "NOPE")) == set()
+
 
 class TestSparqlUpdate:
     """SPARQL 1.1 UPDATE: INSERT/DELETE DATA, DELETE WHERE, and the
