@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pawpaw_spark.lineage import bucket_key
 from pawpaw_spark.session import truncated_checkpoint
 
 
@@ -210,8 +211,9 @@ def canonicalize_nodes(
     nodes: DataFrame, match_edges: DataFrame, salt_buckets: int = 64
 ) -> DataFrame:
     """Assign canon_id to every node: symbols take their component's min
-    member (prefix-preserved); everything else is its own canon. Adds a
-    salted partition key for the final write (mega-repo defusal)."""
+    member (prefix-preserved); everything else is its own canon. Adds
+    ``salt``, an ``int`` hash bucket of ``canon_id`` kept as a stored
+    column of the flat ``nodes`` table (pipeline.build_kg)."""
     comps = connected_components(match_edges)
     sym_canon = comps.select(
         F.concat(F.lit("sym:"), F.col("node")).alias("node_id"),
@@ -222,7 +224,7 @@ def canonicalize_nodes(
         .withColumn("canon_id", F.coalesce(F.col("__canon"), F.col("node_id")))
         .drop("__canon")
     )
-    return out.withColumn("salt", F.pmod(F.xxhash64("canon_id"), F.lit(salt_buckets)))
+    return out.withColumn("salt", bucket_key(F.col("canon_id"), salt_buckets))
 
 
 def rewrite_edges_canonical(edges: DataFrame, nodes_canon: DataFrame) -> DataFrame:

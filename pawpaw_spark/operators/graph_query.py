@@ -13,10 +13,10 @@ the edge table — declarative DataFrame ops end to end, so Catalyst owns
 the physical strategy:
 
 * every constant (predicate or endpoint) becomes a ``filter`` on the
-  slice, which reaches the parquet/Iceberg scan as a pushed predicate —
-  with the edge table partitioned by ``pred`` (storage.write_partitioned
-  does exactly that for KG edge tables) a constant-predicate triple
-  reads ONLY its partition;
+  slice, which reaches the parquet/Iceberg scan as a pushed predicate
+  (row-group min/max stats skip what they can; the batch store's
+  ``edges_canonical`` is flat AQE-sized files, not partitioned by
+  ``pred``, so there is no directory pruning);
 * join order is greedy-connected: start from the most-constrained
   triple (most constants), then repeatedly attach a triple sharing a
   variable with the bound set.  Disconnected patterns raise rather than

@@ -123,8 +123,8 @@ def build_kg(
             f"{cat}.pawpaw.nodes"
         ) and spark.catalog.tableExists(f"{cat}.pawpaw.edges_canonical")
     else:
-        # dynamic partitionOverwriteMode (set by run_stage) suppresses the
-        # root _SUCCESS marker — probe for committed partition dirs instead
+        # probe for committed data: part files, or salt= directories in a
+        # store written before the global tables were flat
         def _has_output(path: str) -> bool:
             return os.path.isdir(path) and any(
                 not e.startswith((".", "_")) for e in os.listdir(path)
@@ -146,14 +146,14 @@ def build_kg(
         # rewrite edges against the WRITTEN node table — joining the
         # unwritten plan would re-run union-find + node distinct a second
         # time (measured 46s of pure recompute at 20k files)
-        nodes_canon = write_partitioned(nodes_canon, "pawpaw.nodes", nodes_out, ("salt",))
+        nodes_canon = write_partitioned(nodes_canon, "pawpaw.nodes", nodes_out, ())
         edges_canon = write_partitioned(
             rewrite_edges_canonical(edges, nodes_canon).withColumn(
                 "salt", bucket_key(F.col("subj"), 64)
             ),
             "pawpaw.edges_canonical",
             edges_out,
-            ("salt",),
+            (),
         )
         lineage.record(
             spark,
@@ -205,7 +205,7 @@ def build_kg(
                 metrics.withColumn("salt", bucket_key(F.col("node"), 64)),
                 "pawpaw.node_metrics",
                 metrics_out,
-                ("salt",),
+                (),
             )
             lineage.record(
                 spark,

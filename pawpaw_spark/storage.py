@@ -42,40 +42,53 @@ def write_partitioned(
     partition_cols: tuple[str, ...],
     mode: str = "overwrite",
 ) -> DataFrame:
-    """Materialize a partitioned table; Iceberg when available, else
-    parquet at ``path``. Input is clustered by the partition columns
-    first so each task writes one file per partition it owns instead of
-    a (tasks x partitions) small-file explosion. Returns a re-read of
-    the written table (downstream consumers read the materialized form,
-    never re-run the producing plan)."""
+    """Materialize a table; Iceberg when available, else parquet at
+    ``path``. The input goes through a REBALANCE hint on the partition
+    columns: AQE coalesces small shuffle partitions and splits skewed
+    ones up to the advisory size, so tasks write few files of a useful
+    size instead of a (tasks x partitions) small-file explosion. With no
+    ``partition_cols`` the table is flat files: that is how
+    ``build_kg`` writes the KG store's global tables, since no reader
+    filters on their ``salt`` key. (The per-bucket lineage tables keep
+    ``bucket=`` directories, their resume unit; ``lineage.run_stage``
+    writes those.) Returns a re-read of the written table (downstream
+    consumers read the materialized form, never re-run the producing
+    plan)."""
     spark = df.sparkSession
     cat = iceberg_catalog(spark)
-    clustered = df.repartition(*[df[c] for c in partition_cols])
+    clustered = df.hint("rebalance", *partition_cols)
     if cat is not None:
         full = f"{cat}.{table}"
-        writer = clustered.writeTo(full).partitionedBy(*partition_cols)
+        writer = clustered.writeTo(full)
+        if partition_cols:
+            # partitionedBy needs at least one column
+            writer = writer.partitionedBy(*partition_cols)
         if mode == "overwrite":
             writer.createOrReplace()
         else:
             writer.append()
         return spark.table(full)
+    writer = clustered.write.mode(mode)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
     # Force STATIC overwrite for the parquet fallback: pipeline stages set
     # partitionOverwriteMode=dynamic session-wide (lineage.run_stage), under
     # which mode='overwrite' only replaces partitions present in the NEW
-    # data — a re-run covering fewer salt values would silently leave stale
-    # partitions on disk and bless them via the stage checkpoint.
+    # data — a re-run covering fewer partition values would silently leave
+    # stale partitions on disk and bless them via the stage checkpoint.
+    # Static also clears a store written one directory per salt value.
     if mode == "overwrite":
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
         try:
-            clustered.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+            writer.parquet(path)
         finally:
             if prev is not None:
                 spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             else:
                 spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     else:
-        clustered.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+        writer.parquet(path)
     return spark.read.parquet(path)
 
 

@@ -260,6 +260,115 @@ class TestAnalyticsStage:
         assert log3 == log1 + 1, "iters change did not recompute analytics"
 
 
+# read-back schemas of the global tables as written one directory per
+# salt value (salt inferred as int from the directory names); the flat
+# layout must read back identically
+_SALT_DIR_SCHEMAS = {
+    "nodes": [
+        ("node_id", "string"), ("kind", "string"), ("canon_id", "string"),
+        ("salt", "int"),
+    ],
+    "edges_canonical": [
+        ("subj", "string"), ("pred", "string"), ("obj", "string"),
+        ("doc_id", "string"), ("start", "int"), ("stop", "int"), ("salt", "int"),
+    ],
+    "node_metrics": [
+        ("node", "string"), ("out_deg", "bigint"), ("in_deg", "bigint"),
+        ("rank", "double"), ("comp", "string"), ("salt", "int"),
+    ],
+}
+
+
+def _salt_dirs(path):
+    return [e for e in os.listdir(path) if e.startswith("salt=")]
+
+
+def _rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+class TestStoreLayout:
+    """The global tables (nodes, edges_canonical, node_metrics) are flat
+    AQE-sized parquet files; the per-bucket lineage tables keep their
+    ``bucket=`` directories."""
+
+    def test_global_tables_flat_with_unchanged_schema(
+        self, spark, src, tmp_path_factory
+    ):
+        out = str(tmp_path_factory.mktemp("kg_layout"))
+        build_kg(spark, src, out, n_buckets=8, analytics=True)
+        width = spark.sparkContext.defaultParallelism
+        for table, schema in _SALT_DIR_SCHEMAS.items():
+            path = f"{out}/{table}"
+            assert _salt_dirs(path) == [], table
+            parts = [e for e in os.listdir(path) if e.startswith("part-")]
+            assert 1 <= len(parts) <= width, (table, parts)
+            got = [
+                (f.name, f.dataType.simpleString())
+                for f in spark.read.parquet(path).schema.fields
+            ]
+            assert got == schema, table
+        assert any(e.startswith("bucket=") for e in os.listdir(f"{out}/edges"))
+
+    def test_canonicalize_nodes_salt_is_int(self, spark):
+        from pawpaw_spark.operators.canon import canonicalize_nodes
+
+        nodes = spark.createDataFrame(
+            [("sym:a", "symbol", "sym:a"), ("sym:b", "symbol", "sym:b")],
+            "node_id string, kind string, canon_id string",
+        )
+        match = spark.createDataFrame([("a", "b")], "a string, b string")
+        out = canonicalize_nodes(nodes, match)
+        assert out.schema["salt"].dataType.simpleString() == "int"
+        assert {r.canon_id for r in out.collect()} == {"sym:a"}
+
+    def test_resume_over_salt_directory_store(self, spark, src, tmp_path_factory):
+        """A store written one directory per salt value (the earlier
+        layout) resumes: unchanged input skips canon and reads it as is;
+        changed input rewrites it flat, with no stale salt= directory."""
+        import shutil
+
+        from pawpaw_spark.lineage import LineageLog
+
+        out = str(tmp_path_factory.mktemp("kg_old_layout"))
+        build_kg(spark, src, out, n_buckets=8)
+        for table in ("nodes", "edges_canonical"):
+            path = f"{out}/{table}"
+            spark.read.parquet(path).write.partitionBy("salt").parquet(path + ".old")
+            shutil.rmtree(path)
+            os.rename(path + ".old", path)
+            assert _salt_dirs(path)
+        before = _rows(spark.read.parquet(f"{out}/edges_canonical"))
+
+        def canon_runs():
+            return LineageLog(out).read(spark).filter(F.col("stage") == "canon").count()
+
+        assert canon_runs() == 1
+        res = build_kg(spark, src, out, n_buckets=8)
+        assert canon_runs() == 1, "canon re-ran on unchanged input"
+        assert _rows(res["edges_canonical"]) == before
+        assert _salt_dirs(f"{out}/edges_canonical")
+
+        # one edited file -> canon re-runs and rewrites both tables flat
+        first = src.select("repo", "path").orderBy("repo", "path").first()
+        edited = (F.col("repo") == first.repo) & (F.col("path") == first.path)
+        changed = src.withColumn(
+            "content",
+            F.when(edited, F.concat("content", F.lit("\nx = 1\n")))
+            .otherwise(F.col("content")),
+        ).withColumn("sha256", F.sha2(F.col("content").cast("binary"), 256))
+        res = build_kg(spark, changed, out, n_buckets=8)
+        assert canon_runs() == 2
+        for table in ("nodes", "edges_canonical"):
+            assert _salt_dirs(f"{out}/{table}") == [], table
+        fresh = str(tmp_path_factory.mktemp("kg_old_layout_fresh"))
+        want = build_kg(spark, changed, fresh, n_buckets=8)
+        for table in ("nodes", "edges_canonical"):
+            assert _rows(res[table]) == _rows(want[table]), table
+
+
 class TestIncrementalComponents:
     def _cc(self, spark, edges):
         from pawpaw_spark.operators.canon import connected_components
