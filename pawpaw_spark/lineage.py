@@ -3,9 +3,13 @@
 Batch-idempotent design: every stage writes its output parquet
 partitioned by a bucket key; a ``_lineage`` parquet table records
 (stage, partition_key, input_fingerprint, rows_in, rows_out, wall_ms,
-status). On resume, completed (stage, partition, fingerprint) triples
-are anti-joined away and only missing/invalidated buckets recompute,
-with dynamic partition overwrite so re-runs are idempotent.
+status). On resume, buckets whose (partition, fingerprint) pair is
+already recorded are dropped from the stage input (a set difference on
+the driver: both sides are one row per bucket), and only missing or
+invalidated buckets recompute, with dynamic partition overwrite so
+re-runs are idempotent. ``wall_ms`` is the wall time of the stage run
+that wrote the bucket, shared by every bucket of that run; it is not a
+per-bucket time.
 """
 
 from __future__ import annotations
@@ -17,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pawpaw_spark.schemas import LINEAGE_SCHEMA
+from pawpaw_spark.session import local_frame
+from pawpaw_spark.storage import has_data
 
 
 def bucket_key(col, n_buckets: int):
@@ -34,7 +40,7 @@ class LineageLog:
         try:
             return spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
         except Exception:
-            return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+            return local_frame(spark, [], LINEAGE_SCHEMA)
 
     def completed(self, spark: SparkSession, stage: str) -> DataFrame:
         """(partition_key, input_fingerprint) of successful runs."""
@@ -47,9 +53,7 @@ class LineageLog:
 
     def record(self, spark: SparkSession, rows: list[dict]) -> None:
         if rows:
-            spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(
-                self.path
-            )
+            local_frame(spark, rows, LINEAGE_SCHEMA).write.mode("append").parquet(self.path)
 
 
 def stage_fingerprints(df: DataFrame, bucket_col: str = "bucket") -> DataFrame:
@@ -81,8 +85,10 @@ def run_stage(
     ``inp`` must carry ``bucket_col``. Buckets whose (key, fingerprint)
     already appear in the lineage log are skipped; the rest run through
     ``transform`` (which must preserve ``bucket_col``) and land in
-    ``out_dir`` via dynamic partition overwrite. Returns the full stage
-    output (reading previously-completed buckets from disk).
+    ``out_dir`` via dynamic partition overwrite, one ``bucket=``
+    directory per bucket. Returns the full stage output (reading
+    previously-completed buckets from disk). Each recorded bucket's
+    ``wall_ms`` is the wall of this whole run, not its own time.
 
     Pass a precomputed/cached ``fps`` (from :func:`stage_fingerprints`)
     when several stages share the same input — fingerprinting hashes
@@ -94,16 +100,17 @@ def run_stage(
 
     if fps is None:
         fps = stage_fingerprints(inp, bucket_col)
-    done = lineage.completed(spark, stage)
-    pending = fps.join(
-        done,
-        (fps[bucket_col].cast("string") == done["partition_key"])
-        & (fps["fp"] == done["input_fingerprint"]),
-        "left_anti",
-    )
-    pending_rows = pending.collect()  # bucket list is small (metadata, not data)
-    pending_keys = [r[bucket_col] for r in pending_rows]
-    fp_by_key = {r[bucket_col]: (r["fp"], r["rows_in"]) for r in pending_rows}
+    # both sides are one row per bucket (metadata, not data): diff them
+    # on the driver, and skip the lineage read before its first write
+    done = set()
+    if has_data(spark, lineage.path):
+        done = {tuple(r) for r in lineage.completed(spark, stage).collect()}
+    fp_by_key = {
+        r[bucket_col]: (r["fp"], r["rows_in"])
+        for r in fps.collect()
+        if (str(r[bucket_col]), r["fp"]) not in done
+    }
+    pending_keys = sorted(fp_by_key)
 
     if pending_keys:
         todo = inp.filter(F.col(bucket_col).isin(pending_keys))
@@ -111,16 +118,11 @@ def run_stage(
         result = transform(todo)
         # cluster by the partition column first: otherwise every task
         # holds rows of many buckets and partitionBy fans out
-        # n_tasks x n_buckets small files (2048 at local[32]/64 buckets).
-        # A secondary content-derived salt spreads each bucket over up to
-        # 8 write tasks — bucket = repo-hash, and a mega-repo (the skew
-        # fixture holds 40% of the corpus) would otherwise serialize its
-        # whole write through one straggler task. Deterministic salt
-        # (hash of the first column), so task retries are safe; files per
-        # bucket directory stay bounded at 8.
-        first = result.columns[0]
-        salt = F.pmod(F.xxhash64(F.col(first)), F.lit(8))
-        result.repartition(F.col(bucket_col), salt).write.mode("overwrite").partitionBy(
+        # n_tasks x n_buckets small files. REBALANCE lets AQE coalesce
+        # small buckets into one write task and split a skewed one (a
+        # mega-repo: the skew fixture holds 40% of the corpus) over
+        # several, so files are sized by the advisory partition size
+        result.hint("rebalance", bucket_col).write.mode("overwrite").partitionBy(
             bucket_col
         ).parquet(out_path)
         wall_ms = int((time.time() - t0) * 1000)

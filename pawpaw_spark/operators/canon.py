@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pawpaw_spark.lineage import bucket_key
-from pawpaw_spark.session import truncated_checkpoint
+from pawpaw_spark.session import local_frame, truncated_checkpoint
 
 
 def _driver_union_find(spark, rows, node_field) -> DataFrame:
@@ -40,7 +40,7 @@ def _driver_union_find(spark, rows, node_field) -> DataFrame:
             # union by min so the root IS the component min
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    out = [(n, find(n)) for n in parent]
+    out = [{"node": n, "comp": find(n)} for n in parent]
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -49,7 +49,7 @@ def _driver_union_find(spark, rows, node_field) -> DataFrame:
             T.StructField("comp", node_field.dataType, True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def connected_components(
@@ -92,11 +92,9 @@ def connected_components(
         .persist()
     )
     if driver_threshold and driver_threshold > 0:
-        small = (
-            sym.limit(driver_threshold + 1).count() <= driver_threshold
-        )
-        if small:
-            rows = [(r["src"], r["dst"]) for r in sym.collect()]
+        # one probe: the size test and, below the cutover, the pairs
+        rows = sym.limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
             out = _driver_union_find(
                 edges.sparkSession, rows, sym.schema["src"]
             )

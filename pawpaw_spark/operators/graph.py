@@ -357,9 +357,10 @@ def reachability(
     appearance of its source in a frontier) + one anti-join against the
     visited set (the classic Pregel-style BFS cost; both are
     AQE-handled shuffles on the node id). Each level is eagerly
-    localCheckpoint-ed: lineage stays O(1) per level and the
-    empty-frontier early exit reads a materialized count, not a
-    recompute. ``seeds`` is a DataFrame (column ``node``), never a
+    checkpointed with :func:`truncated_checkpoint`, so the size
+    estimate of the visited set does not compound over levels: lineage
+    stays O(1) per level and the empty-frontier early exit reads a
+    materialized count, not a recompute. ``seeds`` is a DataFrame (column ``node``), never a
     driver-side list — seed sets can be query results (e.g. "all
     symbols defined in this repo")."""
     if max_depth < 0:
@@ -374,21 +375,19 @@ def reachability(
     n_e = e.count()  # materializes the cache; sizes the loop width
     try:
         with fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_e):
-            visited = (
+            visited = truncated_checkpoint(
                 seeds.select(F.col("node"))
                 .distinct()
                 .withColumn("depth", F.lit(0).cast("long"))
-                .localCheckpoint(eager=True)
             )
             frontier = visited
             for d in range(1, max_depth + 1):
-                nxt = (
+                nxt = truncated_checkpoint(
                     e.join(frontier, e["src"] == frontier["node"])
                     .select(F.col("dst").alias("node"))
                     .distinct()
                     .join(visited, "node", "left_anti")
                     .withColumn("depth", F.lit(d).cast("long"))
-                    .localCheckpoint(eager=True)
                 )
                 if nxt.isEmpty():
                     break

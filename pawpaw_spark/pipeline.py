@@ -7,7 +7,6 @@ This is the spark-submit entry surface (jobs/build_kg.py wraps it).
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,7 +17,7 @@ from pawpaw_spark.operators.canon import canonicalize_nodes, rewrite_edges_canon
 from pawpaw_spark.operators.linking import link_symbols
 from pawpaw_spark.operators.segment import check_sha256_invariant, with_sha256
 from pawpaw_spark.operators.triples import build_edges, build_nodes, segment_by_lang
-from pawpaw_spark.storage import write_partitioned
+from pawpaw_spark.storage import has_data, iceberg_catalog, write_partitioned
 
 
 def build_kg(
@@ -38,7 +37,7 @@ def build_kg(
     labels, checkpoint-resumable like the canon stage.
 
     Resume: rerunning with the same out_dir skips completed buckets
-    (lineage anti-join); changed input rows invalidate exactly their
+    (their lineage rows); changed input rows invalidate exactly their
     bucket via the per-bucket fingerprint.
 
     ``edges_mode``:
@@ -115,8 +114,6 @@ def build_kg(
         (r["partition_key"], r["input_fingerprint"])
         for r in lineage.completed(spark, "canon").collect()
     }
-    from pawpaw_spark.storage import iceberg_catalog
-
     cat = iceberg_catalog(spark)
     if cat is not None:
         outputs_exist = spark.catalog.tableExists(
@@ -125,12 +122,7 @@ def build_kg(
     else:
         # probe for committed data: part files, or salt= directories in a
         # store written before the global tables were flat
-        def _has_output(path: str) -> bool:
-            return os.path.isdir(path) and any(
-                not e.startswith((".", "_")) for e in os.listdir(path)
-            )
-
-        outputs_exist = _has_output(nodes_out) and _has_output(edges_out)
+        outputs_exist = has_data(spark, nodes_out) and has_data(spark, edges_out)
     if ("__global__", canon_fp) in canon_done and outputs_exist:
         if cat is not None:
             nodes_canon = spark.table(f"{cat}.pawpaw.nodes")
@@ -190,7 +182,7 @@ def build_kg(
         if cat is not None:
             metrics_exist = spark.catalog.tableExists(f"{cat}.pawpaw.node_metrics")
         else:
-            metrics_exist = _has_output(metrics_out)
+            metrics_exist = has_data(spark, metrics_out)
         if ("__global__", metrics_fp) in analytics_done and metrics_exist:
             if cat is not None:
                 metrics = spark.table(f"{cat}.pawpaw.node_metrics")

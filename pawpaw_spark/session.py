@@ -81,6 +81,24 @@ def get_spark(
     return spark
 
 
+def local_frame(spark, rows: list[dict], schema):
+    """A one-partition DataFrame over driver-built ``rows`` (dicts keyed
+    by ``schema``'s field names).
+
+    The rows go to the JVM as one Arrow table and plan as a
+    ``LocalTableScan``: no Python worker runs, and a write of the frame
+    is one task and one part file. ``spark.createDataFrame(list)``
+    instead pickles the rows into ``defaultParallelism`` partitions
+    that Python workers decode, and a write of it leaves one small file
+    per partition. Build every small driver-side frame on the build
+    path (lineage rows, the driver union-find) through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
 def truncated_checkpoint(df):
     """``localCheckpoint(eager=True)`` that also RESETS plan statistics.
 

@@ -35,6 +35,22 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
     return None
 
 
+def has_data(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds committed data: an entry whose name
+    starts with neither ``_`` nor ``.`` (a part file or a partition
+    directory; ``_SUCCESS``, ``_temporary`` and checksum files do not
+    count). Probed through the Hadoop ``FileSystem`` of the path, so a
+    URI (``file://``, ``hdfs://``, ``s3a://``) works like a plain path."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return False
+    return any(
+        not s.getPath().getName().startswith(("_", ".")) for s in fs.listStatus(p)
+    )
+
+
 def write_partitioned(
     df: DataFrame,
     table: str,
@@ -51,9 +67,10 @@ def write_partitioned(
     ``build_kg`` writes the KG store's global tables, since no reader
     filters on their ``salt`` key. (The per-bucket lineage tables keep
     ``bucket=`` directories, their resume unit; ``lineage.run_stage``
-    writes those.) Returns a re-read of the written table (downstream
-    consumers read the materialized form, never re-run the producing
-    plan)."""
+    writes those through the same REBALANCE hint on ``bucket``, so the
+    files inside each directory are AQE-sized as well.) Returns a
+    re-read of the written table (downstream consumers read the
+    materialized form, never re-run the producing plan)."""
     spark = df.sparkSession
     cat = iceberg_catalog(spark)
     clustered = df.hint("rebalance", *partition_cols)

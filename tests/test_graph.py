@@ -269,6 +269,25 @@ class TestReachability:
         }
         assert got == {"0": 0}
 
+    def test_long_chain_matches_python_bfs(self, spark):
+        """45 levels of checkpointed frontiers: every level and the
+        cutoff agree with a plain-Python BFS."""
+        from pawpaw_spark.operators.graph import reachability
+
+        chain = [(i, i + 1) for i in range(45)] + [(7, 3), (20, 44)]
+        e = _edge_df(spark, chain)
+        for max_depth in (40, 50):
+            got = {
+                r.node: r.depth
+                for r in reachability(
+                    e, self._seeds(spark, "0"), max_depth=max_depth
+                ).collect()
+            }
+            assert got == py_bfs(chain, ["0"], max_depth), max_depth
+        # 43 levels: 21..43 only by the chain (44 and 45 come early, by
+        # the 20 -> 44 shortcut)
+        assert max(got.values()) == 43
+
 
 def py_pagerank_fp(edges, iters, damping=0.85, scale=10**15):
     """Pure-Python-int mirror of the engine's fixed-point recurrence —

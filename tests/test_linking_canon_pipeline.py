@@ -202,6 +202,45 @@ class TestPipeline:
         assert LineageLog(out).read(spark).filter(F.col("stage") == "canon").count() == 2
 
 
+    def test_resume_on_uri_out_dir(self, spark, src, tmp_path_factory):
+        """A URI out_dir resumes like a plain path: outputs are probed
+        through the path's Hadoop FileSystem, so an unchanged rerun
+        skips canon too."""
+        from pawpaw_spark.lineage import LineageLog
+
+        out = "file://" + str(tmp_path_factory.mktemp("kg_uri"))
+        build_kg(spark, src, out, n_buckets=8)
+        log = LineageLog(out)
+        n_log = log.read(spark).count()
+        build_kg(spark, src, out, n_buckets=8)
+        assert log.read(spark).count() == n_log
+        assert log.read(spark).filter(F.col("stage") == "canon").count() == 1
+
+    def test_job_count(self, spark, src, tmp_path_factory):
+        """Jobs of a fresh build and of an unchanged resume, from the
+        status tracker: a new counting-only job fails this test."""
+        out = str(tmp_path_factory.mktemp("kg_jobs"))
+        src.count()  # materialize the cached fixture outside the groups
+        sc = spark.sparkContext
+        for phase, limit in _MAX_JOBS.items():
+            group = f"test_job_count.{phase}"
+            sc.setJobGroup(group, group)
+            try:
+                build_kg(spark, src, out, n_buckets=8)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert n_jobs <= limit, (phase, n_jobs)
+
+
+# jobs per build_kg over the module fixture (80 files, 8 buckets): 43
+# when the fresh build is the session's first, 41 later. Before lineage
+# rows went through session.local_frame and pending buckets were diffed
+# on the driver, the same builds ran 48 / 46 (fresh) and 15 (resume)
+_MAX_JOBS = {"fresh": 43, "resume": 15}
+
+
 class TestAnalyticsStage:
     def test_node_metrics_written_and_resumed(self, spark, src, tmp_path_factory):
         import pytest as _pytest
@@ -286,7 +325,10 @@ def _salt_dirs(path):
 def _rows(df):
     from collections import Counter
 
-    return Counter(tuple(r) for r in df.collect())
+    def freeze(v):  # segments carry array columns
+        return tuple(map(freeze, v)) if isinstance(v, list) else v
+
+    return Counter(tuple(map(freeze, r)) for r in df.collect())
 
 
 class TestStoreLayout:
@@ -367,6 +409,69 @@ class TestStoreLayout:
         want = build_kg(spark, changed, fresh, n_buckets=8)
         for table in ("nodes", "edges_canonical"):
             assert _rows(res[table]) == _rows(want[table]), table
+
+
+    def test_resume_over_salted_stage_layout(self, spark, src, tmp_path_factory):
+        """Stage tables written with the earlier 8-way content salt
+        (several files per ``bucket=`` directory) resume: unchanged
+        input skips every bucket and appends no lineage row; one edited
+        repo rewrites only its bucket's directory, and all four tables
+        equal a fresh build's."""
+        import shutil
+
+        from pawpaw_spark.lineage import LineageLog, bucket_key
+
+        out = str(tmp_path_factory.mktemp("kg_salted_stages"))
+        build_kg(spark, src, out, n_buckets=8)
+        for stage in _STAGES:
+            path = f"{out}/{stage}"
+            df = spark.read.parquet(path)
+            salt = F.pmod(F.xxhash64(F.col(df.columns[0])), F.lit(8))
+            df.repartition(32, "bucket", salt).write.partitionBy("bucket").parquet(
+                path + ".old"
+            )
+            shutil.rmtree(path)
+            os.rename(path + ".old", path)
+            assert max(map(len, _bucket_files(path).values())) > 1, stage
+        files = {stage: _bucket_files(f"{out}/{stage}") for stage in _STAGES}
+        log = LineageLog(out)
+        n_log = log.read(spark).count()
+
+        build_kg(spark, src, out, n_buckets=8)
+        assert log.read(spark).count() == n_log
+        for stage in _STAGES:
+            assert _bucket_files(f"{out}/{stage}") == files[stage], stage
+
+        first = src.select("repo", "path").orderBy("repo", "path").first()
+        edited = (F.col("repo") == first.repo) & (F.col("path") == first.path)
+        changed = src.withColumn(
+            "content",
+            F.when(edited, F.concat("content", F.lit("\nx = 1\n")))
+            .otherwise(F.col("content")),
+        ).withColumn("sha256", F.sha2(F.col("content").cast("binary"), 256))
+        hit = spark.range(1).select(bucket_key(F.lit(first.repo), 8)).first()[0]
+        res = build_kg(spark, changed, out, n_buckets=8)
+        for stage in _STAGES:
+            now = _bucket_files(f"{out}/{stage}")
+            assert now.keys() == files[stage].keys(), stage
+            rewritten = {d for d in now if now[d] != files[stage][d]}
+            assert rewritten == {f"bucket={hit}"}, stage
+        fresh = str(tmp_path_factory.mktemp("kg_salted_stages_fresh"))
+        want = build_kg(spark, changed, fresh, n_buckets=8)
+        for table in (*_STAGES, "nodes", "edges_canonical"):
+            assert _rows(res[table]) == _rows(want[table]), table
+
+
+_STAGES = ("segments", "edges")
+
+
+def _bucket_files(path):
+    """``bucket=`` directory -> the set of its part-file names."""
+    return {
+        d: {f for f in os.listdir(f"{path}/{d}") if f.startswith("part-")}
+        for d in os.listdir(path)
+        if d.startswith("bucket=")
+    }
 
 
 class TestIncrementalComponents:

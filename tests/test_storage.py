@@ -135,3 +135,42 @@ class TestZValue:
             z_value(["a"])
         with _pt.raises(ValueError, match="62"):
             z_value(["a", "b", "c", "d"], 16)
+
+
+class TestHasData:
+    def test_probe_plain_path_and_uri(self, spark, tmp_path):
+        from pawpaw_spark.storage import has_data
+
+        d = tmp_path / "t"
+        for path in (str(d), f"file://{d}"):
+            assert not has_data(spark, path)  # missing
+        d.mkdir()
+        (d / "_SUCCESS").write_text("")
+        (d / ".part-0.crc").write_text("")
+        for path in (str(d), f"file://{d}"):
+            assert not has_data(spark, path)  # bookkeeping files only
+        spark.range(3).write.mode("overwrite").parquet(str(d))
+        for path in (str(d), f"file://{d}"):
+            assert has_data(spark, path)
+        (tmp_path / "p" / "bucket=1").mkdir(parents=True)
+        assert has_data(spark, f"file://{tmp_path}/p")  # a partition dir
+
+
+class TestLocalFrame:
+    def test_one_partition_no_python_scan(self, spark, tmp_path):
+        from pawpaw_spark.schemas import LINEAGE_SCHEMA
+        from pawpaw_spark.session import local_frame
+
+        rows = [
+            {"stage": "s", "partition_key": str(i), "input_fingerprint": "f",
+             "rows_in": i, "rows_out": 2 * i, "wall_ms": 5, "status": "ok"}
+            for i in range(64)
+        ]
+        df = local_frame(spark, rows, LINEAGE_SCHEMA)
+        assert df.schema == LINEAGE_SCHEMA
+        assert df.rdd.getNumPartitions() == 1
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert [r.asDict() for r in df.collect()] == rows
+        df.write.parquet(str(tmp_path / "o"))
+        assert len(list((tmp_path / "o").glob("part-*"))) == 1
+        assert local_frame(spark, [], LINEAGE_SCHEMA).count() == 0
