@@ -8,20 +8,26 @@ sys.path.insert(0, "/root/repo")
 REFERENCE_PATH = "/root/reference"
 
 
-def _has_reference() -> bool:
-    return os.path.isdir(os.path.join(REFERENCE_PATH, "pawpaw"))
-
-
 @pytest.fixture(scope="session")
 def pawpaw_ref():
-    """The reference implementation, imported in-process as the oracle."""
-    if not _has_reference():
-        pytest.skip("reference pawpaw not available")
-    if REFERENCE_PATH not in sys.path:
-        sys.path.insert(0, REFERENCE_PATH)
-    import pawpaw  # noqa: F401
+    """The reference implementation, imported in-process as the oracle:
+    the checkout at REFERENCE_PATH when there is one, else any importable
+    ``pawpaw`` (pip install pawpaw). Skips the test when neither is."""
+    if os.path.isdir(REFERENCE_PATH) and REFERENCE_PATH not in sys.path:
+        # APPEND, never prepend: the checkout ships a sibling ``tests``
+        # package that must not shadow this suite's modules
+        sys.path.append(REFERENCE_PATH)
+    return pytest.importorskip("pawpaw", reason="reference pawpaw not available")
 
-    return pawpaw
+
+def reference_file(relpath: str) -> str:
+    """Path of a file in the reference checkout (its demo inputs);
+    skips the calling test when that file is absent, e.g. for a
+    pip-installed pawpaw, which ships no ``docs/`` tree."""
+    path = os.path.join(REFERENCE_PATH, relpath)
+    if not os.path.isfile(path):
+        pytest.skip(f"reference file not available: {relpath}")
+    return path
 
 
 @pytest.fixture(scope="session")

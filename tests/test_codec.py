@@ -2,12 +2,8 @@
 REFERENCE's own JsonEncoder/JsonDecoderHook (ito.py:423-512)."""
 
 import json
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/reference")
-from pawpaw import Ito  # noqa: E402
 
 from pawpaw_spark.codec import from_pawpaw_json, segments_to_pawpaw_json
 from pawpaw_spark.operators.segment import segment
@@ -60,7 +56,8 @@ def segs(spark):
 
 
 class TestEncode:
-    def test_reference_decodes_stringless_export(self, spark, segs):
+    def test_reference_decodes_stringless_export(self, spark, segs, pawpaw_ref):
+        Ito = pawpaw_ref.Ito
         out = {r["doc_id"]: r["json"] for r in segments_to_pawpaw_json(segs).collect()}
         assert set(out) == {d for d, _ in DOCS}
         for doc, text in DOCS:
@@ -78,7 +75,8 @@ class TestEncode:
             for (a, b), _, _ in got:
                 assert str(Ito(text, a, b)) == text[a:b]
 
-    def test_reference_decodes_embedded_string_export(self, spark, segs):
+    def test_reference_decodes_embedded_string_export(self, spark, segs, pawpaw_ref):
+        Ito = pawpaw_ref.Ito
         src = spark.createDataFrame(DOCS, "doc_id string, content string")
         out = {
             r["doc_id"]: r["json"]
@@ -101,7 +99,8 @@ class TestEncode:
 
 
 class TestDecode:
-    def test_import_of_reference_encoded_json(self, spark):
+    def test_import_of_reference_encoded_json(self, spark, pawpaw_ref):
+        Ito = pawpaw_ref.Ito
         # build a tree reference-side, encode with the REFERENCE encoder,
         # import into segment rows
         text = "hello big world"
@@ -146,7 +145,8 @@ class TestPickleInterop:
     """Optional pickle sink: trees round-trip through the reference's
     own pickle surface (__getstate__/__setstate__, ito.py:404-421)."""
 
-    def test_pickle_round_trip_and_reference_unpickle(self, spark, segs):
+    def test_pickle_round_trip_and_reference_unpickle(self, spark, segs, pawpaw_ref):
+        Ito = pawpaw_ref.Ito
         import pickle
 
         from pawpaw_spark.codec import from_pickle, segments_to_pickle

@@ -13,17 +13,13 @@ equivalent interpreted by the kernel:
   pattern + duplicate group names (``docs/demos/compounds/solution.py``)
 """
 
-import sys
-
 import pytest
 import regex
 
-sys.path.insert(0, "/root/reference")
-import pawpaw  # noqa: E402
-from pawpaw import arborform  # noqa: E402
-
 from pawpaw_spark.kernel import segment_text
 from pawpaw_spark.rules import RuleSet, extract, split
+
+from .conftest import reference_file
 
 GRADES_PAT = (
     r"(?<school>School = (?<name>.+?)\n"
@@ -95,8 +91,9 @@ def _our_rows(segs, keep=lambda s: True):
     return rows
 
 
-def test_class_grades_parity():
-    text = open("/root/reference/docs/demos/class_grades/input.txt").read()
+def test_class_grades_parity(pawpaw_ref):
+    pawpaw, arborform = pawpaw_ref, pawpaw_ref.arborform
+    text = open(reference_file("docs/demos/class_grades/input.txt")).read()
     ref_itor = arborform.Extract(regex.compile(GRADES_PAT, regex.DOTALL))
     ref = _ref_rows(ref_itor(pawpaw.Ito(text)))
 
@@ -110,7 +107,8 @@ def _qa_desc(match, group):  # the demo's desc_func
     return match.group(1)
 
 
-def test_qa_pipeline_parity():
+def test_qa_pipeline_parity(pawpaw_ref):
+    pawpaw, arborform = pawpaw_ref, pawpaw_ref.arborform
     # reference graph, exactly as the demo wires it
     itor_split = arborform.Split(
         regex.compile(r"\n+(?=Q_? )", regex.DOTALL), desc="Q/A tuple"
@@ -153,8 +151,9 @@ def test_qa_pipeline_parity():
     assert {r[2] for r in ours} >= {"Q/A tuple", "Q", "A"}
 
 
-def test_compounds_parity():
-    text = open("/root/reference/docs/demos/compounds/compound_1.txt").read()
+def test_compounds_parity(pawpaw_ref):
+    pawpaw, arborform = pawpaw_ref, pawpaw_ref.arborform
+    text = open(reference_file("docs/demos/compounds/compound_1.txt")).read()
     splitter = arborform.Split(regex.compile(r"(?<=^|\n)(?=MODEL \d+)", regex.DOTALL))
     extractor = arborform.Extract(regex.compile(COMPOUNDS_PAT, regex.VERBOSE | regex.DOTALL))
     splitter.connections.append(arborform.Connectors.Delegate(extractor))

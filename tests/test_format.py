@@ -1,13 +1,8 @@
 """Format mini-language: differential vs reference Ito.__format__
 (``pawpaw/ito.py:599-715``) + the Spark batch surface."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/reference")
-import pawpaw  # noqa: E402
 
 from pawpaw_spark.functions.format import format_segments, parse_format, render
 
@@ -22,7 +17,7 @@ SPECS = [
 ]
 
 
-def _itos(s):
+def _itos(pawpaw, s):
     if len(s) >= 7:
         return [
             pawpaw.Ito(s, 2, 7, desc="d1"),
@@ -33,9 +28,9 @@ def _itos(s):
 
 
 @pytest.mark.parametrize("spec", SPECS)
-def test_render_matches_reference(spec):
+def test_render_matches_reference(pawpaw_ref, spec):
     for s in STRINGS:
-        for ito in _itos(s):
+        for ito in _itos(pawpaw_ref, s):
             try:
                 exp = format(ito, spec)
             except Exception as e:  # noqa: BLE001 — error parity by type
@@ -76,7 +71,7 @@ def test_span_only_spec_needs_no_source(spark):
     assert got == ["word@0-3", "word@4-7"]
 
 
-def test_tree_dump_matches_reference_dumper(spark):
+def test_tree_dump_matches_reference_dumper(spark, pawpaw_ref):
     import regex
 
     from pawpaw import arborform, visualization
@@ -87,7 +82,7 @@ def test_tree_dump_matches_reference_dumper(spark):
     text = "nine 9 ten 10 eleven 11"
     pat = r"(?P<phrase>(?P<word>[a-z]+) (?P<number>\d+))"
 
-    root = pawpaw.Ito(text, desc="$doc")
+    root = pawpaw_ref.Ito(text, desc="$doc")
     for t in arborform.Extract(regex.compile(pat))(root.clone()):
         root.children.add(t)
     expected = visualization.pepo.Tree().dumps(root)

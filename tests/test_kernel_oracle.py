@@ -211,11 +211,8 @@ class TestFromSubstrings:
         ("xxyxx", ("xx", "xx")),
     ]
 
-    def test_sequential_multi_substring(self):
-        import sys
-
-        sys.path.insert(0, "/root/reference")
-        from pawpaw import Ito
+    def test_sequential_multi_substring(self, pawpaw_ref):
+        Ito = pawpaw_ref.Ito
 
         from pawpaw_spark.rules import literal
 

@@ -7,6 +7,8 @@ import pytest
 from pawpaw_spark.kernel import segment_text
 from pawpaw_spark.nlp import NLP_RULES
 
+from .conftest import reference_file
+
 TEXTS = {
     "abbrs": "Dr. Smith met Gov. Jones. They talked. The end came fast.",
     "numbers": "Pi is 3.14159 and e is 2.71828. Avogadro is 6.022e23 or 6.022 x 10^ 23.",
@@ -34,9 +36,6 @@ def _ours(text):
 
 
 def _ref(pawpaw_ref, text):
-    import sys
-
-    sys.path.insert(0, "/root/reference")
     from pawpaw.nlp import SimpleNlp
 
     doc = SimpleNlp().from_text(text)
@@ -67,7 +66,7 @@ def test_constitution_high_parity(pawpaw_ref):
     from regex-version-specific tie-breaks are tolerated, but the suite
     should catch real drift)."""
     with open(
-        "/root/reference/docs/demos/us_constitution/us_constitution.txt", encoding="utf-8"
+        reference_file("docs/demos/us_constitution/us_constitution.txt"), encoding="utf-8"
     ) as f:
         text = f.read()
     got, exp = _ours(text), _ref(pawpaw_ref, text)

@@ -8,14 +8,8 @@ Pure-python kernel only (no Spark session): each example runs in
 microseconds, so hypothesis can afford real example counts.
 """
 
-import sys
-
 import regex
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/reference")
-import pawpaw  # noqa: E402
-from pawpaw import Ito, arborform  # noqa: E402
 
 from pawpaw_spark.kernel import segment_text
 from pawpaw_spark.rules import BoundaryRetention, RuleSet, extract, gaps, split
@@ -36,24 +30,24 @@ EXTRACT_PAT = r"(?P<word>[^\W\d_]+)|(?P<num>\d+(?:\.\d+)?)"
 NESTED_PAT = r"(?P<pair>(?P<w>[^\W\d_]+)\s+(?P<n>\d+))"
 
 
-def _ref_extract(text: str, pat: str):
-    itor = arborform.Extract(regex.compile(pat, regex.DOTALL))
-    root = Ito(text)
+def _ref_extract(pawpaw, text: str, pat: str):
+    itor = pawpaw.arborform.Extract(regex.compile(pat, regex.DOTALL))
+    root = pawpaw.Ito(text)
     return [*itor(root)]
 
 
 class TestExtractProperty:
     @given(text=TEXT)
     @settings(**SETTINGS)
-    def test_flat_alternation(self, text):
-        ref = oracle_tree_tuples(_ref_extract(text, EXTRACT_PAT))
+    def test_flat_alternation(self, pawpaw_ref, text):
+        ref = oracle_tree_tuples(_ref_extract(pawpaw_ref, text, EXTRACT_PAT))
         got = kernel_tuples(segment_text(text, RuleSet.of(extract(EXTRACT_PAT))))
         assert got == ref, text
 
     @given(text=TEXT)
     @settings(**SETTINGS)
-    def test_nested_groups(self, text):
-        ref = oracle_tree_tuples(_ref_extract(text, NESTED_PAT))
+    def test_nested_groups(self, pawpaw_ref, text):
+        ref = oracle_tree_tuples(_ref_extract(pawpaw_ref, text, NESTED_PAT))
         got = kernel_tuples(segment_text(text, RuleSet.of(extract(NESTED_PAT))))
         assert got == ref, text
 
@@ -65,7 +59,8 @@ class TestSplitProperty:
         pat=st.sampled_from([r"\s+", r"[.,!?]", r"-"]),
     )
     @settings(**SETTINGS)
-    def test_boundary_retention(self, text, retention, pat):
+    def test_boundary_retention(self, pawpaw_ref, text, retention, pat):
+        Ito, arborform = pawpaw_ref.Ito, pawpaw_ref.arborform
         ref_map = {
             BoundaryRetention.NONE: arborform.Split.BoundaryRetention.NONE,
             BoundaryRetention.LEADING: arborform.Split.BoundaryRetention.LEADING,
@@ -87,7 +82,8 @@ class TestSplitProperty:
 class TestGapsProperty:
     @given(text=TEXT, pat=st.sampled_from([r"\s+", r"\d+", r"[^\W\d_]+"]))
     @settings(**SETTINGS)
-    def test_complement(self, text, pat):
+    def test_complement(self, pawpaw_ref, text, pat):
+        Ito = pawpaw_ref.Ito
         src = Ito(text)
         non_gaps = [Ito(text, *m.span()) for m in regex.finditer(pat, text, flags=regex.DOTALL)]
         ref = {

@@ -52,9 +52,6 @@ def _got(df):
 
 
 def _ref_spans(pawpaw_ref, ref_style, text):
-    import sys
-
-    sys.path.insert(0, "/root/reference")
     from pawpaw.table import StyledTable
 
     itor = StyledTable(ref_style).get_itor()

@@ -4,13 +4,8 @@ involved), char-for-char on equivalent trees."""
 
 import contextlib
 import io
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/reference")
-from pawpaw import Ito  # noqa: E402
-from pawpaw.visualization import pepo  # noqa: E402
 
 from pawpaw_spark.operators.segment import segment
 from pawpaw_spark.rules import RuleSet, extract, split
@@ -25,10 +20,11 @@ RULES = RuleSet.of(
 )
 
 
-def _ref_tree():
+def _ref_tree(pawpaw):
     """The same tree, built reference-side."""
     import regex
 
+    Ito = pawpaw.Ito
     root = Ito(TEXT, desc=None)
     sent_bounds = [m.span() for m in regex.finditer(r"[.!?]\s*", TEXT)]
     pos = 0
@@ -49,6 +45,13 @@ def _ref_tree():
 
 
 @pytest.fixture(scope="module")
+def pepo(pawpaw_ref):
+    from pawpaw.visualization import pepo
+
+    return pepo
+
+
+@pytest.fixture(scope="module")
 def segs(spark):
     src = spark.createDataFrame([("v1", TEXT)], "doc_id string, content string")
     return segment(src, RULES, include_root=False).cache()
@@ -58,23 +61,23 @@ TB = {"v1": TEXT}
 
 
 class TestPepoParity:
-    def test_compact(self, spark, segs):
-        ref = pepo.Compact().dumps(*_ref_tree().children)
+    def test_compact(self, spark, segs, pawpaw_ref, pepo):
+        ref = pepo.Compact().dumps(*_ref_tree(pawpaw_ref).children)
         got = compact_dump(segs, TB, "v1")
         assert got == ref
 
-    def test_compact_no_children(self, spark, segs):
-        ref = pepo.Compact(children=False).dumps(*_ref_tree().children)
+    def test_compact_no_children(self, spark, segs, pawpaw_ref, pepo):
+        ref = pepo.Compact(children=False).dumps(*_ref_tree(pawpaw_ref).children)
         got = compact_dump(segs, TB, "v1", children=False)
         assert got == ref
 
-    def test_xml(self, spark, segs):
-        ref = pepo.Xml().dumps(*_ref_tree().children)
+    def test_xml(self, spark, segs, pawpaw_ref, pepo):
+        ref = pepo.Xml().dumps(*_ref_tree(pawpaw_ref).children)
         got = xml_dump(segs, TB, "v1")
         assert got == ref
 
-    def test_json(self, spark, segs):
-        ref = pepo.Json().dumps(*_ref_tree().children)
+    def test_json(self, spark, segs, pawpaw_ref, pepo):
+        ref = pepo.Json().dumps(*_ref_tree(pawpaw_ref).children)
         got = json_dump(segs, TB, "v1")
         assert got == ref
         # and it parses
@@ -85,12 +88,12 @@ class TestPepoParity:
 
 
 class TestHighlighterParity:
-    def test_highlight_matches_reference_stdout(self, spark, segs):
+    def test_highlight_matches_reference_stdout(self, spark, segs, pawpaw_ref):
         from pawpaw.visualization import sgr
         from pawpaw.visualization.highlighter import Highlighter
 
         colors = [sgr.Colors.EightBit(17), sgr.Colors.EightBit(22), sgr.Colors.EightBit(52)]
-        ref_root = _ref_tree()
+        ref_root = _ref_tree(pawpaw_ref)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             Highlighter(colors).print(ref_root)

@@ -131,10 +131,7 @@ class TestXmlHelpers:
         segs = segment_xml(src, include_root=True).cache()
         return src, segs
 
-    def test_local_name_and_namespace_cols_vs_reference(self, spark):
-        import sys
-
-        sys.path.insert(0, "/root/reference")
+    def test_local_name_and_namespace_cols_vs_reference(self, spark, pawpaw_ref):
         from pawpaw.xml import XmlHelper
         from pyspark.sql import functions as F
 
