@@ -3085,10 +3085,11 @@ def q_kg_temporal_reach(spark, sf_dir):
     the call graph with formula-derived edge times (t = 7r mod 97 from
     the source symbol's index — deterministic in both engines), seeded
     at the 16 hub symbols at t=0: earliest arrival over non-decreasing
-    time paths. The engine runs the REAL semi-naive improved-frontier
-    fixpoint (a late improvement must REOPEN downstream nodes — pinned
-    by tests); the oracle is a DuckDB recursive CTE whose state space
-    is the finite (node, time) pairs, collapsed to min per node."""
+    time paths. The engine runs the min-time relaxation fixpoint
+    (session.relax; a late improvement must re-send downstream —
+    pinned by tests); the oracle is a DuckDB recursive CTE whose state
+    space is the finite (node, time) pairs, collapsed to min per
+    node."""
     from pawpaw_spark.operators.graph import temporal_reachability
 
     e = _call_edges(spark, sf_dir).withColumn(

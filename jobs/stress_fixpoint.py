@@ -12,13 +12,15 @@ scale stress. The queries are the CONTRACT functions themselves
 (__spark_entry__), so the measured plans are exactly what the
 correctness gate verifies at small SF:
 
-  kg_scc            trim + forward-max coloring + reverse collect
-                    (log-diameter doubling-chord groups)
+  kg_scc            trim + forward-max coloring + reverse collect,
+                    both max relaxations (session.relax;
+                    log-diameter doubling-chord groups)
   kg_datalog        semi-naive stratified Datalog over the binary tree
                     (depth log2(m): sf1 adds ~3 rounds over sf0.1)
   kg_path_closure   CHILD_OF* reflexive-transitive closure
-  kg_temporal_reach improved-frontier time-respecting reachability
-                    over the REAL kernel-parsed call graph
+  kg_temporal_reach min-time relaxation (session.relax) for
+                    time-respecting reachability over the REAL
+                    kernel-parsed call graph
   kg_communities    label propagation (fixed 4 rounds) over the same
 """
 

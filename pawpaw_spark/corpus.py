@@ -105,6 +105,8 @@ def _xml_file(rng: random.Random) -> str:
 
 
 def load_constitution() -> str | None:
+    """The us_constitution demo text, or None when the reference
+    checkout is absent."""
     if os.path.exists(_CONSTITUTION_PATH):
         with open(_CONSTITUTION_PATH, encoding="utf-8") as f:
             return f.read()
@@ -112,15 +114,25 @@ def load_constitution() -> str | None:
 
 
 def generate_rows(
-    n_files: int = 200, seed: int = 42, include_demo_corpora: bool = True,
+    n_files: int = 200, seed: int = 42, include_demo_corpora: bool = False,
     start: int = 0,
 ):
     """Yield dict rows of the source table. Deterministic in (n_files,
-    seed, start). ``start`` offsets the path/commit index space so
-    chunked generators (each chunk its own seed) still emit globally
-    unique (repo, path, commit) doc identities."""
+    seed, start) on every host. ``start`` offsets the path/commit index
+    space so chunked generators (each chunk its own seed) still emit
+    globally unique (repo, path, commit) doc identities.
+
+    ``include_demo_corpora=True`` mixes windows of the reference's
+    us_constitution demo into the text files and raises
+    ``FileNotFoundError`` when that file is absent."""
     rng = random.Random(seed)
-    constitution = load_constitution() if include_demo_corpora else None
+    constitution = None
+    if include_demo_corpora:
+        constitution = load_constitution()
+        if constitution is None:
+            raise FileNotFoundError(
+                f"include_demo_corpora=True needs {_CONSTITUTION_PATH}"
+            )
     kinds = ["py", "py", "py", "txt", "txt", "md", "grades", "qa", "xml", "canon"]
     for i in range(start, start + n_files):
         # mega-repo skew: org0/repo0 takes ~40% of files
@@ -155,7 +167,7 @@ def generate_rows(
         }
 
 
-def source_df(spark, n_files: int = 200, seed: int = 42, include_demo_corpora: bool = True):
+def source_df(spark, n_files: int = 200, seed: int = 42, include_demo_corpora: bool = False):
     from pawpaw_spark.schemas import SOURCE_SCHEMA
 
     rows = list(generate_rows(n_files, seed, include_demo_corpora))

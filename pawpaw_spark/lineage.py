@@ -42,14 +42,19 @@ class LineageLog:
         except Exception:
             return local_frame(spark, [], LINEAGE_SCHEMA)
 
-    def completed(self, spark: SparkSession, stage: str) -> DataFrame:
-        """(partition_key, input_fingerprint) of successful runs."""
-        return (
-            self.read(spark)
+    def completed(self, spark: SparkSession, stage: str) -> set[tuple[str, str]]:
+        """``{(partition_key, input_fingerprint)}`` of the stage's
+        successful runs: one collect, and no read at all before
+        ``_lineage`` holds data."""
+        if not has_data(spark, self.path):
+            return set()
+        return {
+            (r.partition_key, r.input_fingerprint)
+            for r in self.read(spark)
             .filter((F.col("stage") == stage) & (F.col("status") == "ok"))
             .select("partition_key", "input_fingerprint")
-            .distinct()
-        )
+            .collect()
+        }
 
     def record(self, spark: SparkSession, rows: list[dict]) -> None:
         if rows:
@@ -101,10 +106,8 @@ def run_stage(
     if fps is None:
         fps = stage_fingerprints(inp, bucket_col)
     # both sides are one row per bucket (metadata, not data): diff them
-    # on the driver, and skip the lineage read before its first write
-    done = set()
-    if has_data(spark, lineage.path):
-        done = {tuple(r) for r in lineage.completed(spark, stage).collect()}
+    # on the driver
+    done = lineage.completed(spark, stage)
     fp_by_key = {
         r[bucket_col]: (r["fp"], r["rows_in"])
         for r in fps.collect()

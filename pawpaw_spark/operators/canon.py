@@ -5,7 +5,7 @@ with localCheckpoint to cut lineage (SURVEY.md §4.2 item 3).
 At 100 TB the label table is hash-partitioned by node; each iteration is
 two co-partitioned joins + one agg. Iterations ~ cluster diameter
 (symbol-name clusters are shallow); `max_iters` bounds the skewed worst
-case and the checkpoint interval keeps the DAG from growing without
+case and a checkpoint every round keeps the DAG from growing without
 bound.
 """
 
@@ -57,8 +57,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iters: int = 25,
-    checkpoint_every: int = 5,
-    on_nonconverged: str = "raise",
     driver_threshold: int = 200_000,
 ) -> DataFrame:
     """(node, component) — component = min node id in the component.
@@ -70,9 +68,8 @@ def connected_components(
     instead of O(n) — ``max_iters=25`` covers components of ~2^25
     diameter. Undirected: edges are symmetrized once up front.
 
-    If the loop exits without converging the result is WRONG (labels
-    mid-propagation); ``on_nonconverged`` = 'raise' (default) or 'warn'
-    (log and return the unconverged labels) — never silent.
+    If the loop exits without converging the result would be WRONG
+    (labels mid-propagation), so it raises instead.
 
     Size cutover: a distinct match-pair set at or below
     ``driver_threshold`` is metadata-sized, and each distributed round
@@ -103,7 +100,6 @@ def connected_components(
     n_sym = sym.count()  # metadata action; sizes the loop shuffle width
     from pawpaw_spark.session import fixpoint_loop_conf
 
-    converged = False
     with fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_sym):
         nodes = sym.select(F.col("src").alias("node")).distinct()
         labels = nodes.withColumn("comp", F.col("node"))
@@ -150,24 +146,19 @@ def connected_components(
             )
             labels = new_labels
             if changed == 0:
-                converged = True
                 break
+        else:
+            sym.unpersist()
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} "
+                "rounds; labels are mid-propagation and component "
+                "assignments are wrong. Raise max_iters (rounds ~ "
+                "log2(component diameter))."
+            )
     # release the cached symmetrized edge set on the distributed path
     # too (no-op when driver_threshold==0 and it was never persisted);
     # otherwise the executor storage leaks for the session lifetime.
     sym.unpersist()
-    if not converged:
-        msg = (
-            f"connected_components did not converge in {max_iters} rounds; "
-            "labels are mid-propagation and component assignments are wrong. "
-            "Raise max_iters (rounds ~ log2(component diameter))."
-        )
-        if on_nonconverged == "warn":
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning)
-        else:
-            raise RuntimeError(msg)
     return labels.select("node", "comp")
 
 

@@ -15,7 +15,8 @@ Scale notes (100 TB corpus -> billions of edges):
   destination — the textbook 2-shuffle round. The dangling-mass term is
   a 1-row aggregate broadcast back in, never a driver action, so an
   iteration adds NO job boundary; ``checkpoint_every`` bounds lineage
-  for deep iteration counts exactly as the CC loop does.
+  for deep iteration counts (the CC loop instead checkpoints every
+  round: its convergence probe is an action per round).
 * Triangle counting uses the degree-ordered orientation (each
   undirected edge directed from its lower-(degree, id) endpoint), which
   bounds every node's out-neighborhood by O(sqrt(m)) regardless of
@@ -25,10 +26,17 @@ Scale notes (100 TB corpus -> billions of edges):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pawpaw_spark.session import truncated_checkpoint
+from pawpaw_spark.session import (
+    fixpoint_loop_conf,
+    relax,
+    semi_naive,
+    truncated_checkpoint,
+)
 
 
 # PageRank fixed-point unit: ranks live in int64 multiples of 1e-15.
@@ -234,8 +242,6 @@ def pagerank(
     # the lazy plan, which executes under the caller's session conf.
     from contextlib import nullcontext
 
-    from pawpaw_spark.session import fixpoint_loop_conf
-
     scope = (
         fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_nodes)
         if materialize and iters > 0
@@ -335,6 +341,19 @@ def _pagerank_iterate(
     )
 
 
+@contextmanager
+def _loop_edges(e: DataFrame):
+    """Persist a traversal's edge table for its loop and size the
+    :func:`pawpaw_spark.session.fixpoint_loop_conf` scope by its row
+    count."""
+    e = e.persist()
+    try:
+        with fixpoint_loop_conf(e.sparkSession, approx_state_rows=e.count()):
+            yield e
+    finally:
+        e.unpersist()
+
+
 def reachability(
     edges: DataFrame,
     seeds: DataFrame,
@@ -352,56 +371,13 @@ def reachability(
     any cluster size or engine — the DuckDB contract oracle is a
     recursive CTE over the same edge set.
 
-    Scale shape: per level, one equi-join frontier⋈edges (frontier is
-    the NEW nodes only, so each edge is expanded at most once per
-    appearance of its source in a frontier) + one anti-join against the
-    visited set (the classic Pregel-style BFS cost; both are
-    AQE-handled shuffles on the node id). Each level is eagerly
-    checkpointed with :func:`truncated_checkpoint`, so the size
-    estimate of the visited set does not compound over levels: lineage
-    stays O(1) per level and the empty-frontier early exit reads a
-    materialized count, not a recompute. ``seeds`` is a DataFrame (column ``node``), never a
-    driver-side list — seed sets can be query results (e.g. "all
-    symbols defined in this repo")."""
-    if max_depth < 0:
-        raise ValueError("max_depth must be >= 0")
-    from pawpaw_spark.session import fixpoint_loop_conf
-
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    n_e = e.count()  # materializes the cache; sizes the loop width
-    try:
-        with fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_e):
-            visited = truncated_checkpoint(
-                seeds.select(F.col("node"))
-                .distinct()
-                .withColumn("depth", F.lit(0).cast("long"))
-            )
-            frontier = visited
-            for d in range(1, max_depth + 1):
-                nxt = truncated_checkpoint(
-                    e.join(frontier, e["src"] == frontier["node"])
-                    .select(F.col("dst").alias("node"))
-                    .distinct()
-                    .join(visited, "node", "left_anti")
-                    .withColumn("depth", F.lit(d).cast("long"))
-                )
-                if nxt.isEmpty():
-                    break
-                # visited is a LAZY union of the (already materialized)
-                # per-level frontiers: each node's row is checkpointed
-                # exactly once; re-checkpointing the union here would
-                # rewrite the near-full visited set at EVERY level —
-                # O(V * depth) I/O where O(V) suffices. Plan depth is
-                # bounded by max_depth, so lineage stays shallow.
-                visited = visited.union(nxt)
-                frontier = nxt
-    finally:
-        e.unpersist()
-    return visited
+    It is :func:`shortest_path_tree` without the parent column: the
+    same semi-naive BFS, one level per round. ``seeds`` is a DataFrame
+    (column ``node``), never a driver-side list — seed sets can be
+    query results (e.g. "all symbols defined in this repo")."""
+    return shortest_path_tree(
+        edges, seeds, src_col, dst_col, max_depth
+    ).select("node", "depth")
 
 
 def shortest_paths(
@@ -412,7 +388,6 @@ def shortest_paths(
     weight_col: str | None = None,
     max_dist: int | None = None,
     max_rounds: int = 256,
-    rounds_per_check: int = 3,
 ) -> DataFrame:
     """Weighted single/multi-source shortest paths -> (node, dist):
     the minimum total edge weight of any DIRECTED path from the seed
@@ -433,24 +408,19 @@ def shortest_paths(
     more are absent (the impact-radius query; also what keeps a
     recursive-CTE oracle finite on cyclic graphs). ``max_rounds``
     guards convergence — rounds needed = max edge count over all
-    shortest paths, so the guard only fires on pathological
+    shortest paths, plus one — so the guard only fires on pathological
     deep-chain graphs, and it RAISES rather than returning
     mid-relaxation distances.
 
-    Scale shape: per round, one equi-join (frontier-less full
-    relaxation on the distance table — O(V) rows) + one min-agg, both
-    on node ids; ``rounds_per_check`` rounds batch per truncated
-    checkpoint and the loop runs under
-    :func:`pawpaw_spark.session.fixpoint_loop_conf` (see
-    :func:`strongly_connected_components` for both rationales).
+    The loop is :func:`pawpaw_spark.session.relax` with the message
+    ``dist + w`` (kept only while ``<= max_dist``) and ``min``: per
+    round one equi-join of the edges with the distance table and one
+    min-agg, both on node ids.
     """
     if max_rounds < 1:
         raise ValueError("max_rounds must be >= 1")
-    if rounds_per_check < 1:
-        raise ValueError("rounds_per_check must be >= 1")
     if max_dist is not None and max_dist < 0:
         raise ValueError("max_dist must be >= 0")
-    from pawpaw_spark.session import fixpoint_loop_conf
 
     if weight_col is None:
         w = F.lit(1).cast("long")
@@ -465,71 +435,25 @@ def shortest_paths(
                 )
             )
         )
-    e = (
+    dist = F.col("val") + F.col("w")
+    if max_dist is not None:
+        dist = F.when(dist <= max_dist, dist)
+    with _loop_edges(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
             w.alias("w"),
         )
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
-        .persist()
-    )
-    n_e = e.count()  # materializes the cache; sizes the loop width
-    try:
-        with fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_e):
-            dist = truncated_checkpoint(
-                seeds.select("node")
-                .distinct()
-                .withColumn("dist", F.lit(0).cast("long"))
-            )
-            done = 0
-            while done < max_rounds:
-                k = min(rounds_per_check, max_rounds - done)
-                prev = dist
-                cur = dist
-                for _ in range(k):
-                    relaxed = cur.join(
-                        e, cur["node"] == e["src"]
-                    ).select(
-                        F.col("dst").alias("node"),
-                        (F.col("dist") + F.col("w")).alias("dist"),
-                    )
-                    if max_dist is not None:
-                        relaxed = relaxed.filter(F.col("dist") <= max_dist)
-                    cur = (
-                        cur.select("node", "dist")
-                        .union(relaxed)
-                        .groupBy("node")
-                        .agg(F.min("dist").alias("dist"))
-                    )
-                # one probe per batch: a row changed iff its min dist
-                # shrank or the node is new (distances only decrease)
-                cur = truncated_checkpoint(
-                    cur.join(
-                        prev.select("node", F.col("dist").alias("_pd")),
-                        "node",
-                        "left",
-                    ).select(
-                        "node",
-                        "dist",
-                        (
-                            F.col("_pd").isNull()
-                            | (F.col("dist") < F.col("_pd"))
-                        ).alias("_chg"),
-                    )
-                )
-                changed = cur.filter(F.col("_chg")).limit(1).count()
-                dist = cur.select("node", "dist")
-                done += k
-                if changed == 0:
-                    return dist
-            raise RuntimeError(
-                f"shortest_paths: relaxation did not converge within "
-                f"max_rounds={max_rounds} (a shortest path traverses more "
-                "edges than the cap — raise max_rounds)"
-            )
-    finally:
-        e.unpersist()
+    ) as e:
+        seen = truncated_checkpoint(
+            seeds.select("node").distinct()
+            .withColumn("val", F.lit(0).cast("long"))
+        )
+        return relax(
+            seen, e, dist, "min", max_rounds, "shortest_paths",
+            "rounds needed = the most edges on any shortest path, plus one",
+        ).withColumnRenamed("val", "dist")
 
 
 def triangle_count(
@@ -721,7 +645,6 @@ def strongly_connected_components(
     dst_col: str = "dst",
     max_outer: int = 64,
     max_color_rounds: int = 512,
-    rounds_per_check: int = 3,
 ) -> DataFrame:
     """Exact SCC decomposition of a DIRECTED graph -> (node, scc),
     where ``scc`` is the LARGEST member id of the node's strongly
@@ -756,10 +679,9 @@ def strongly_connected_components(
        nothing — any intermediate w on a u→c path has color(w) ≥ c
        (c reaches u reaches w) and a larger id reaching w would reach
        c too, contradicting color(c) = c. This is the same fixpoint
-       shape as COLOR (one join + one max-agg per round), so rounds
-       batch and pipeline identically — unlike a per-level backward
-       BFS, which costs 3-4 shuffles per level plus a growing union
-       chain.
+       as COLOR over the reversed class edges — unlike a per-level
+       backward BFS, which costs 3-4 shuffles per level plus a growing
+       union chain.
     4. Peel the collected SCCs (survivors are exactly the rows with
        rcolor < color), repeat from 1 on the remainder.
 
@@ -775,21 +697,18 @@ def strongly_connected_components(
     sized to the edge count (not the corpus default) and AQE off, since
     a fixpoint loop's stages are uniform and the adaptive re-planning
     would otherwise materialize every tiny shuffle as its own job
-    (measured 223 jobs -> ~40 for one sf0.1 decomposition).
-    ``rounds_per_check`` propagation rounds are composed lazily between
-    checkpoints, so one job executes several rounds of shuffle stages
-    back-to-back (identical subplans collapse via ReusedExchange; the
-    only cost is up to k-1 no-op rounds after the fixpoint lands).
+    (measured 223 jobs -> ~40 for one sf0.1 decomposition). COLOR and
+    COLLECT are :func:`pawpaw_spark.session.relax` with ``max``: three
+    rounds per checkpoint run back to back in one job (identical
+    subplans collapse via ReusedExchange; the only cost is up to two
+    no-op rounds after the fixpoint lands), and each needs the active
+    diameter plus one rounds, capped by ``max_color_rounds`` (raises).
     Rounds: trim <= peel depth, color/collect <= active diameter, outer
     rounds <= condensation chain length of same-round-surviving SCCs
     (1 for disjoint SCC families, O(chain) for pathological
     cycle-chains — ``max_outer`` caps it and RAISES rather than
     returning a partial answer, like union-find's convergence guard).
     """
-    if rounds_per_check < 1:
-        raise ValueError("rounds_per_check must be >= 1")
-    from pawpaw_spark.session import fixpoint_loop_conf
-
     e_all = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
@@ -800,52 +719,10 @@ def strongly_connected_components(
     empty = spark.createDataFrame([], "node string, scc string")
     assigned: list[DataFrame] = []
 
-    def _propagate_max(
-        state: DataFrame,
-        adj: DataFrame,
-        from_col: str,
-        to_col: str,
-        val_col: str,
-        max_rounds: int,
-        what: str,
-    ) -> DataFrame:
-        """Monotone max-label fixpoint: each round every node takes
-        ``greatest(own, max of val over adj edges into it)``; batches
-        ``rounds_per_check`` rounds per checkpoint+probe. ``state``
-        must carry (node, val_col, ...passthrough); returns the fixed
-        point with the same columns."""
-        passthrough = [c for c in state.columns if c != val_col]
-        done = 0
-        while done < max_rounds:
-            k = min(rounds_per_check, max_rounds - done)
-            cur = state
-            for j in range(k):
-                inc = (
-                    adj.join(cur, adj[from_col] == cur["node"])
-                    .select(F.col(to_col).alias("node"), F.col(val_col))
-                    .groupBy("node")
-                    .agg(F.max(val_col).alias("_in"))
-                )
-                grown = F.coalesce("_in", F.col(val_col)) > F.col(val_col)
-                cols = passthrough + [
-                    F.greatest(
-                        F.col(val_col), F.coalesce("_in", F.col(val_col))
-                    ).alias(val_col)
-                ]
-                if j == k - 1:
-                    cols.append(grown.alias("_chg"))
-                cur = cur.join(inc, "node", "left").select(*cols)
-            cur = truncated_checkpoint(cur)
-            changed = cur.filter(F.col("_chg")).limit(1).count()
-            state = cur.drop("_chg")
-            done += k
-            if changed == 0:
-                return state
-        raise RuntimeError(
-            f"strongly_connected_components: {what} propagation did not "
-            f"converge within max_color_rounds={max_color_rounds} "
-            "(active-subgraph diameter exceeds the cap)"
-        )
+    hint = (
+        "max_color_rounds; rounds needed = the active subgraph's "
+        "diameter, plus one"
+    )
 
     with fixpoint_loop_conf(spark, approx_state_rows=n_edges):
         active = truncated_checkpoint(
@@ -901,39 +778,34 @@ def strongly_connected_components(
                 )
             )
             # -- forward max-color propagation to fixpoint -------------
-            colors = _propagate_max(
-                active.select("node", F.col("node").alias("color")),
-                ae,
-                from_col="src",
-                to_col="dst",
-                val_col="color",
-                max_rounds=max_color_rounds,
-                what="color",
+            colors = relax(
+                active.select("node", F.col("node").alias("val")),
+                ae, F.col("val"), "max", max_color_rounds,
+                "strongly_connected_components color", hint,
             )
             # -- collect: reverse max within each color class ----------
-            cs = colors.select(F.col("node").alias("_s"), F.col("color").alias("_cs"))
-            cd = colors.select(F.col("node").alias("_d"), F.col("color").alias("_cd"))
-            same = truncated_checkpoint(
+            cs = colors.select(F.col("node").alias("_s"), F.col("val").alias("_cs"))
+            cd = colors.select(F.col("node").alias("_d"), F.col("val").alias("_cd"))
+            same_rev = truncated_checkpoint(
                 ae.join(cs, ae["src"] == F.col("_s"))
                 .join(cd, ae["dst"] == F.col("_d"))
                 .filter(F.col("_cs") == F.col("_cd"))
-                .select("src", "dst")
+                .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-            rcol = _propagate_max(
-                colors.select("node", "color", F.col("node").alias("rcolor")),
-                same,
-                from_col="dst",
-                to_col="src",
-                val_col="rcolor",
-                max_rounds=max_color_rounds,
-                what="collect",
+            rcol = relax(
+                colors.select(
+                    "node", F.col("node").alias("val"),
+                    F.col("val").alias("color"),
+                ),
+                same_rev, F.col("val"), "max", max_color_rounds,
+                "strongly_connected_components collect", hint,
             )
-            members = rcol.filter(F.col("rcolor") == F.col("color")).select(
+            members = rcol.filter(F.col("val") == F.col("color")).select(
                 "node", F.col("color").alias("scc")
             )
             assigned.append(members)
             active = truncated_checkpoint(
-                rcol.filter(F.col("rcolor") != F.col("color")).select("node")
+                rcol.filter(F.col("val") != F.col("color")).select("node")
             )
             n_active = active.count()
         else:
@@ -996,8 +868,6 @@ def topo_layers(
     remaining-edge/node tables are truncated-checkpointed per round, so
     lineage stays O(1). Rounds = DAG depth (the schedule's critical
     path — anything that computes longest paths pays it)."""
-    from pawpaw_spark.session import fixpoint_loop_conf
-
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
@@ -1088,8 +958,6 @@ def label_propagation(
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
-    from pawpaw_spark.session import fixpoint_loop_conf
-
     und = undirected_edges(edges, a_col, b_col).persist()
     n_und = und.count()  # materializes the cache; sizes the loop width
     adj = und.selectExpr("a as node", "b as nbr").union(
@@ -1150,8 +1018,6 @@ def kcore(
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    from pawpaw_spark.session import fixpoint_loop_conf
-
     und = undirected_edges(edges, a_col, b_col).persist()
     n_und = und.count()  # materializes the cache; sizes the loop width
     adj = und.selectExpr("a as node", "b as nbr").union(
@@ -1437,8 +1303,6 @@ def hits(
     # pagerank: state-sized shuffle width, AQE off for the uniform
     # metadata-sized half-step shuffles
     from contextlib import nullcontext
-
-    from pawpaw_spark.session import fixpoint_loop_conf
 
     scope = (
         fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n)
@@ -1856,8 +1720,6 @@ def betweenness_sampled(
     """
     if max_depth < 1:
         raise ValueError("max_depth must be >= 1")
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
-
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
@@ -2015,8 +1877,6 @@ def louvain(
     """
     if max_levels < 1 or max_rounds < 1:
         raise ValueError("max_levels and max_rounds must be >= 1")
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
-
     und = undirected_edges(edges, a_col, b_col)
     we = und.withColumn("w", F.lit(1).cast("long")).persist()
     m = we.count()
@@ -2183,8 +2043,6 @@ def _louvain_level(
     """Local-move phase on one level graph -> (assignment, n_moves):
     parity-alternating move rounds until a full parity cycle is quiet
     or ``max_rounds``."""
-    from pawpaw_spark.session import truncated_checkpoint
-
     nodes = (
         we.select(F.col("a").alias("node"))
         .unionByName(we.select(F.col("b").alias("node")))
@@ -2306,8 +2164,6 @@ def ktruss(
     (tests/test_graph.py::TestKtruss); the round-0 support kernel is
     value-checked in SQL by the ``kg_truss_support`` contract query.
     """
-    from pawpaw_spark.session import fixpoint_loop_conf
-
     und = undirected_edges(edges, a_col, b_col).persist()
     m = und.count()
     if k <= 2 or m == 0:
@@ -2824,7 +2680,6 @@ def temporal_reachability(
     dst_col: str = "dst",
     time_col: str = "t",
     max_rounds: int = 30,
-    on_nonconverged: str = "raise",
 ) -> DataFrame:
     """Time-respecting reachability -> ``(node, earliest)``: the
     minimum arrival time over temporal paths whose hop times are
@@ -2836,88 +2691,34 @@ def temporal_reachability(
     influenced through the time-ordered call/commit graph".
 
     Earliest-arrival is a monotone fixpoint: the state (one min time
-    per reached node) only ever decreases, so the loop is semi-naive —
-    each round expands ONLY the frontier of improved states (one
-    equi-join frontier x edges with the time guard + one min-agg + one
-    improvement anti-check against the state). Round count is bounded
-    by the longest IMPROVING temporal path in hops; ``max_rounds``
-    guards pathological inputs and ``on_nonconverged`` keeps the exit
-    honest ('raise' default / 'warn'). Arrival times are exact values
-    from the input, so results are bit-identical on any cluster size —
-    the contract oracle is a DuckDB recursive CTE over the same edge
-    set (its state space is finite because (node, time) pairs are).
-
-    Scale shape: identical to :func:`reachability` — per-round
-    AQE-handled shuffles on the node id, eager localCheckpoint per
-    round so lineage stays O(1) — plus the time guard rides the join.
+    per reached node) only ever decreases, so the loop is
+    :func:`pawpaw_spark.session.relax` with the message ``t`` (kept
+    only when ``t >= earliest`` of the edge's source) and ``min``. A
+    late improvement re-sends from the improved node in the next
+    round. Round count is the longest IMPROVING temporal path in hops,
+    plus one; ``max_rounds`` guards pathological inputs and RAISES
+    rather than returning mid-relaxation times. Arrival times are exact
+    values from the input, so results are bit-identical on any cluster
+    size — the contract oracle is a DuckDB recursive CTE over the same
+    edge set (its state space is finite because (node, time) pairs
+    are).
     """
-    from pawpaw_spark.session import fixpoint_loop_conf
-
-    e = (
+    with _loop_edges(
         edges.select(
             F.col(src_col).alias("src"),
             F.col(dst_col).alias("dst"),
             F.col(time_col).alias("t"),
+        ).distinct()
+    ) as e:
+        seen = truncated_checkpoint(
+            seeds.groupBy("node").agg(F.min("t").alias("val"))
         )
-        .distinct()
-        .persist()
-    )
-    n_e = e.count()
-    try:
-        with fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_e):
-            state = (
-                seeds.select(F.col("node"), F.col("t").alias("earliest"))
-                .groupBy("node")
-                .agg(F.min("earliest").alias("earliest"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = state
-            converged = False
-            for _ in range(max_rounds):
-                arrivals = (
-                    e.join(frontier, e["src"] == frontier["node"])
-                    .filter(F.col("t") >= F.col("earliest"))
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.min("t").alias("earliest"))
-                )
-                improved = (
-                    arrivals.join(
-                        state.select(
-                            F.col("node"),
-                            F.col("earliest").alias("__cur"),
-                        ),
-                        "node",
-                        "left",
-                    )
-                    .filter(
-                        F.col("__cur").isNull()
-                        | (F.col("earliest") < F.col("__cur"))
-                    )
-                    .select("node", "earliest")
-                    .localCheckpoint(eager=True)
-                )
-                if improved.isEmpty():
-                    converged = True
-                    break
-                state = (
-                    state.join(improved.select("node"), "node", "left_anti")
-                    .unionByName(improved)
-                    .localCheckpoint(eager=True)
-                )
-                frontier = improved
-            if not converged:
-                msg = (
-                    f"temporal_reachability did not converge in "
-                    f"{max_rounds} rounds"
-                )
-                if on_nonconverged == "raise":
-                    raise RuntimeError(msg)
-                import warnings
-
-                warnings.warn(msg)
-            return state
-    finally:
-        e.unpersist()
+        return relax(
+            seen, e, F.when(F.col("t") >= F.col("val"), F.col("t")), "min",
+            max_rounds, "temporal_reachability",
+            "rounds needed = hops on the longest improving temporal path, "
+            "plus one",
+        ).withColumnRenamed("val", "earliest")
 
 
 def shortest_path_tree(
@@ -2933,58 +2734,51 @@ def shortest_path_tree(
     among the depth-(d-1) nodes with an edge into it (seeds have NULL).
     Following parent pointers yields an explicit shortest path — the
     KG explain surface ("HOW does f reach g"), where
-    :func:`reachability` answers only "does it".
+    :func:`reachability` answers only "does it". Nodes deeper than
+    ``max_depth`` are absent.
 
     The min-parent tie-break makes the whole tree a pure function of
     the graph: bit-identical at any parallelism or engine (the oracle
-    recomputes it from the recursive-CTE level table). Same per-level
-    cost shape as :func:`reachability` (frontier equi-join + anti-join
-    + one min-agg), eager checkpoint per level.
+    recomputes it from the recursive-CTE level table).
+
+    The BFS is :func:`pawpaw_spark.session.semi_naive` keyed on
+    ``node``: round ``r`` joins the frontier (the last level) with the
+    edges and takes ``min(src)`` per ``dst`` at depth ``r + 1``, and the
+    anti-join against the visited set keeps the first level that
+    reaches a node. The depth cap belongs to the query, so the step
+    stops at ``max_depth`` and the BFS truncates instead of raising.
     """
     if max_depth < 0:
         raise ValueError("max_depth must be >= 0")
-    from pawpaw_spark.session import fixpoint_loop_conf
 
-    e = (
+    with _loop_edges(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .persist()
-    )
-    n_e = e.count()
-    try:
-        with fixpoint_loop_conf(edges.sparkSession, approx_state_rows=n_e):
-            visited = (
-                seeds.select(F.col("node"))
-                .distinct()
-                .withColumn("depth", F.lit(0).cast("long"))
-                .withColumn("parent", F.lit(None).cast("string"))
-                .localCheckpoint(eager=True)
+    ) as e:
+
+        def step(frontier, _seen, r):
+            if r == max_depth:
+                return None
+            return (
+                e.join(frontier, F.col("src") == F.col("node"))
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("src").alias("parent"))
+                .select("node", F.lit(r + 1).cast("long").alias("depth"),
+                        "parent")
             )
-            frontier = visited.select("node")
-            levels = [visited]
-            for d in range(1, max_depth + 1):
-                nxt = (
-                    e.join(frontier, e["src"] == frontier["node"])
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.min("src").alias("parent"))
-                    .join(
-                        visited.select("node"), "node", "left_anti"
-                    )
-                    .withColumn("depth", F.lit(d).cast("long"))
-                    .select("node", "depth", "parent")
-                    .localCheckpoint(eager=True)
-                )
-                if nxt.isEmpty():
-                    break
-                levels.append(nxt)
-                visited = visited.unionByName(nxt)
-                frontier = nxt.select("node")
-            out = levels[0]
-            for lv in levels[1:]:
-                out = out.unionByName(lv)
-            return out
-    finally:
-        e.unpersist()
+
+        seen = truncated_checkpoint(
+            seeds.select("node").distinct().select(
+                "node",
+                F.lit(0).cast("long").alias("depth"),
+                F.lit(None).cast("string").alias("parent"),
+            )
+        )
+        tree, _ = semi_naive(
+            seen, seen, step, ("node",), max_depth + 1, "shortest_path_tree",
+            "the depth cap ends the BFS first",
+        )
+        return tree
 
 
 def conductance(
@@ -3204,8 +2998,6 @@ def katz_centrality(
     sum keyed by dst, checkpoint-truncated; the accumulator union is
     node-sized.  No driver collection, no loop-to-convergence.
     """
-    from pawpaw_spark.session import truncated_checkpoint
-
     if beta_den < 2:
         raise ValueError("beta_den must be >= 2 (beta must attenuate)")
     if max_len < 1:
@@ -3426,8 +3218,6 @@ def neighborhood_agg(
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    from pawpaw_spark.session import fixpoint_loop_conf, truncated_checkpoint
-
     e = (
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
         .distinct()

@@ -110,10 +110,7 @@ def build_kg(
     # so its checkpoint is a single fingerprint derived from the per-bucket
     # source fingerprints + the linking parameters: unchanged input =>
     # skip linking + union-find entirely and reuse the written tables
-    canon_done = {
-        (r["partition_key"], r["input_fingerprint"])
-        for r in lineage.completed(spark, "canon").collect()
-    }
+    canon_done = lineage.completed(spark, "canon")
     cat = iceberg_catalog(spark)
     if cat is not None:
         outputs_exist = spark.catalog.tableExists(
@@ -175,10 +172,7 @@ def build_kg(
         # graph (and unchanged iters) skips the whole computation
         metrics_out = f"{out_dir}/node_metrics"
         metrics_fp = f"{canon_fp}:pr{pagerank_iters}"
-        analytics_done = {
-            (r["partition_key"], r["input_fingerprint"])
-            for r in lineage.completed(spark, "analytics").collect()
-        }
+        analytics_done = lineage.completed(spark, "analytics")
         if cat is not None:
             metrics_exist = spark.catalog.tableExists(f"{cat}.pawpaw.node_metrics")
         else:

@@ -12,6 +12,7 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def _worker_python_path() -> str:
@@ -230,7 +231,62 @@ def semi_naive(facts, delta, step, key, max_rounds: int, name: str,
             # 4 rounds bounds the part count at 4 for ~state/4 amortized
             # extra writes
             facts = truncated_checkpoint(facts)
-    raise RuntimeError(
+    raise _nonconverged(name, max_rounds, hint)
+
+
+def relax(state, edges, message, agg: str, max_rounds: int, name: str,
+          hint: str):
+    """Monotone value relaxation to its fixpoint -> ``state`` with the
+    same columns.
+
+    ``state`` is ``(node, val, *carried)`` and ``edges`` is ``(src,
+    dst, *cols)``. Each round every edge sends ``message`` (a Column
+    over the edge joined to its source's state row; NULL sends nothing)
+    to ``dst``, and each node takes the better (``agg``: ``"min"`` or
+    ``"max"``) of its own ``val`` and its best incoming message. A node
+    reached for the first time joins the state through the full-outer
+    merge, its carried columns NULL. Values only move one way, so the
+    first round that changes nothing is the fixpoint: R improving
+    rounds need ``max_rounds = R + 1``.
+
+    Three rounds compose lazily per :func:`truncated_checkpoint` (one
+    job runs them back to back), then one probe reads the last round's
+    change flag. Run it inside :func:`fixpoint_loop_conf`.
+    Non-convergence raises as in :func:`semi_naive`.
+    """
+    better = {"min": F.least, "max": F.greatest}[agg]
+    best = {"min": F.min, "max": F.max}[agg]
+    cols = state.columns
+    done = 0
+    while done < max_rounds:
+        k = min(3, max_rounds - done)
+        for j in range(k):
+            inc = (
+                edges.join(state, F.col("src") == F.col("node"))
+                .select(F.col("dst").alias("node"), message.alias("_m"))
+                # dropped before the merge: a node hearing only NULL
+                # messages would otherwise join with a NULL value
+                .filter(F.col("_m").isNotNull())
+                .groupBy("node")
+                .agg(best("_m").alias("_in"))
+            )
+            val = better("val", "_in")
+            out = [val.alias("val") if c == "val" else c for c in cols]
+            if j == k - 1:
+                out.append((~F.col("val").eqNullSafe(val)).alias("_chg"))
+            state = state.join(inc, "node", "full").select(*out)
+        state = truncated_checkpoint(state)
+        done += k
+        changed = not state.filter(F.col("_chg")).isEmpty()
+        state = state.drop("_chg")
+        if not changed:
+            return state
+    raise _nonconverged(name, max_rounds, hint)
+
+
+def _nonconverged(name: str, max_rounds: int, hint: str) -> RuntimeError:
+    """The fixpoint drivers' one non-convergence error."""
+    return RuntimeError(
         f"{name} did not converge in {max_rounds} rounds; "
         f"raise max_rounds ({hint})"
     )

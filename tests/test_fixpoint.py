@@ -14,11 +14,25 @@ each loop shape:
 * ``infer`` counts its naive first round, so transitive-closure rules
   over an n-edge chain take n + 1;
 * ``infer_delta`` starts from the added base facts: one round per
-  added hop, plus the empty one.
+  added hop, plus the empty one;
+* a value relaxation (``session.relax``: shortest paths, temporal
+  reachability, SCC colouring) takes one round per improving hop plus
+  the round that changes nothing: n + 1 over an n-edge chain, and the
+  same over the ring that closes it (colour and collect each).
+
+A BFS is not bounded this way: its depth cap is part of the query, so
+``max_depth`` truncates the tree and never raises.
 """
 
 import pytest
 
+from pawpaw_spark.operators.graph import (
+    reachability,
+    shortest_path_tree,
+    shortest_paths,
+    strongly_connected_components,
+    temporal_reachability,
+)
 from pawpaw_spark.operators.graph_query import match_pattern, path_pairs
 from pawpaw_spark.operators.infer import infer, infer_delta
 from pawpaw_spark.operators.owl import owl_property_closure
@@ -32,6 +46,16 @@ TC_RULES = [
     (("?x", "TC", "?y"), [("?x", "E", "?y")]),
     (("?x", "TC", "?z"), [("?x", "TC", "?y"), ("?y", "E", "?z")]),
 ]
+
+
+def _edges(spark, triples):
+    return spark.createDataFrame(
+        [(s, o) for s, _, o in triples], "src string, dst string"
+    )
+
+
+def _seeds(spark, *nodes):
+    return spark.createDataFrame([(n,) for n in nodes], "node string")
 
 
 def _df(spark, triples):
@@ -106,6 +130,31 @@ def _infer_delta(spark, m):
     )
 
 
+def _shortest_paths(spark, m):
+    out = shortest_paths(_edges(spark, CHAIN), _seeds(spark, "n0"),
+                         max_rounds=m)
+    return {(r.node, r.dist) for r in out.collect()}
+
+
+def _temporal(spark, m):
+    # hop i leaves at time i: every hop improves its target once
+    e = spark.createDataFrame(
+        [(s, o, i) for i, (s, _, o) in enumerate(CHAIN)],
+        "src string, dst string, t long",
+    )
+    seeds = spark.createDataFrame([("n0", 0)], "node string, t long")
+    out = temporal_reachability(e, seeds, max_rounds=m)
+    return {(r.node, r.earliest) for r in out.collect()}
+
+
+def _scc(spark, m):
+    ring = CHAIN + [(f"n{N}", "E", "n0")]
+    out = strongly_connected_components(
+        _edges(spark, ring), max_color_rounds=m
+    )
+    return {(r.node, r.scc) for r in out.collect()}
+
+
 _TC = _tc(CHAIN)
 _INDIRECT = _TC - {(s, o) for s, _, o in CHAIN}
 
@@ -123,6 +172,12 @@ CASES = [
     ("infer", _infer, {(s, "TC", o) for s, o in _TC}, N + 1),
     ("infer_delta", _infer_delta,
      {(s, "TC", o) for s, o in _TC - _tc(OLD)}, len(ADD) + 1),
+    ("shortest_paths", _shortest_paths,
+     {(f"n{i}", i) for i in range(N + 1)}, N + 1),
+    ("temporal_reachability", _temporal,
+     {("n0", 0)} | {(f"n{i + 1}", i) for i in range(N)}, N + 1),
+    ("scc_color_collect", _scc, {(f"n{i}", f"n{N}") for i in range(N + 1)},
+     N + 1),
 ]
 
 
@@ -143,3 +198,15 @@ def test_converges_at_needed_rounds(spark, run, expected, needed):
 def test_raises_one_round_short(spark, run, needed):
     with pytest.raises(RuntimeError, match="did not converge"):
         run(spark, needed - 1)
+
+
+def test_bfs_depth_cap_truncates(spark):
+    e, seeds = _edges(spark, CHAIN), _seeds(spark, "n0")
+    tree = shortest_path_tree(e, seeds, max_depth=2)
+    assert {(r.node, r.depth, r.parent) for r in tree.collect()} == {
+        ("n0", 0, None), ("n1", 1, "n0"), ("n2", 2, "n1"),
+    }
+    depths = reachability(e, seeds, max_depth=N - 1)
+    assert {(r.node, r.depth) for r in depths.collect()} == {
+        (f"n{i}", i) for i in range(N)
+    }

@@ -1287,7 +1287,7 @@ class TestSccAtScale:
         external sink per group that must fall out of TRIM as a
         singleton. Exact labels: group SCC = its zero-padded
         lexicographic-max member; proves the rewritten collect phase
-        and the rounds_per_check batching at a size the sf bench never
+        and the batched relaxation rounds at a size the sf bench never
         reaches (the CC stress test's argument, applied to SCC)."""
         from pyspark.sql import functions as F
 
