@@ -14,9 +14,10 @@ the physical strategy:
 
 * every constant (predicate or endpoint) becomes a ``filter`` on the
   slice, which reaches the parquet/Iceberg scan as a pushed predicate
-  (row-group min/max stats skip what they can; the batch store's
-  ``edges_canonical`` is flat AQE-sized files, not partitioned by
-  ``pred``, so there is no directory pruning);
+  (row-group min/max stats skip what they can). The batch store's
+  ``edges_canonical`` and the streaming sink are partitioned by
+  ``pred``, so a constant predicate is a partition filter there and the
+  slice reads that predicate's directory only;
 * join order is greedy-connected: start from the most-constrained
   triple (most constants), then repeatedly attach a triple sharing a
   variable with the bound set.  Disconnected patterns raise rather than
@@ -880,7 +881,8 @@ def match_pattern(
             for x in t:
                 if _is_var(x) and x[1:] not in seen:
                     seen.append(x[1:])
-    out = out.select(*seen)
+    if out.columns != seen:
+        out = out.select(*seen)
     return out.distinct() if distinct else out
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pawpaw_spark.kernel import segment_text
-from pawpaw_spark.operators.segment import doc_id_col
+from pawpaw_spark.operators.segment import doc_id_col, fan_out
 from pawpaw_spark.rules import Rule, RuleSet, extract
 
 _OUT_DDL = "doc_id string, path array<string>, start long, stop long, desc string"
@@ -94,10 +94,7 @@ def discover(
                 )
 
     src = source.select(doc_id_col(source).alias("__doc_id"), F.col(text_col).alias("__text"))
-    if not source.isStreaming:
-        target = source.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
+    src = fan_out(source, src)
     return src.mapInPandas(run, schema=_OUT_DDL)
 
 

@@ -45,6 +45,25 @@ def doc_id_col(df: DataFrame) -> Column:
     return F.concat_ws("@", F.concat_ws("/", "repo", "path"), "commit")
 
 
+def fan_out(df: DataFrame, src: DataFrame) -> DataFrame:
+    """``src``, a projection of ``df``, repartitioned to
+    ``defaultParallelism`` when ``df`` arrives under-split (a small
+    parquet is one row group -> one non-empty task no matter the core
+    count). At scale inputs carry >> cores splits, so this stays a no-op
+    and no shuffle is added on the 100 TB path.
+
+    The partition count is read from ``df.rdd``, which PySpark caches per
+    DataFrame: a caller that passes the same input on every call plans
+    it once, where a fresh projection's ``.rdd`` would plan it each time.
+    A projection has its input's partition count."""
+    if df.isStreaming:
+        return src
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return src.repartition(target)
+    return src
+
+
 def with_sha256(df: DataFrame, text_col: str = "content") -> DataFrame:
     """Per-row invariant column (input_hint): computed JVM-side."""
     return df.withColumn("sha256", F.sha2(F.col(text_col).cast("binary"), 256))
@@ -69,14 +88,7 @@ def segment(
     src = df.select(
         doc_id_col(df).alias("__doc_id"), F.col(text_col).alias("__text"), *passthrough
     )
-    # Fan out before the kernel when the source arrives under-split (a
-    # small parquet is one row group -> one non-empty task no matter the
-    # core count). At scale inputs carry >> cores splits, so this stays
-    # a no-op — no shuffle is added on the 100 TB path.
-    if not df.isStreaming:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
+    src = fan_out(df, src)
     out_cols = _SEG_COLS + list(passthrough)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -124,10 +136,7 @@ def segment_dispatch(
         F.col(lang_col).alias("__lang"),
         *passthrough,
     )
-    if not df.isStreaming:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
+    src = fan_out(df, src)
     out_cols = _SEG_COLS + list(passthrough)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

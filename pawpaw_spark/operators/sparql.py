@@ -1363,7 +1363,8 @@ def _select_frame(
                    else out.groupBy())
         out = grouped.agg(*aggs)
         order = [it[1] if it[0] == "var" else it[4] for it in items]
-        out = out.select(*order)
+        if out.columns != order:
+            out = out.select(*order)
         _OPS = {">": "__gt__", ">=": "__ge__", "<": "__lt__",
                 "<=": "__le__", "=": "__eq__", "!=": "__ne__"}
         for v, op, val in plan.get("having", ()):
@@ -1381,7 +1382,8 @@ def _select_frame(
                 f"SELECT variable(s) {missing} not bound by the pattern "
                 f"(bound: {out.columns})"
             )
-        out = out.select(*names)
+        if out.columns != names:
+            out = out.select(*names)
         if set_sem:
             out = out.distinct()  # projection can re-introduce duplicates
     elif set_sem and len(parts) > 1:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pawpaw_spark.operators.segment import doc_id_col, segment, segment_dispatch
+from pawpaw_spark.operators.segment import doc_id_col, fan_out, segment, segment_dispatch
 from pawpaw_spark.rulesets import LANG_RULES, TEXT_RULES
 
 DEFINE_DESCS = ("def_name", "class_name")
@@ -253,10 +253,7 @@ def build_edges_fused(source: DataFrame, lang_rules=None) -> DataFrame:
         F.col("content").alias("__text"),
         F.col("lang").alias("__lang"),
     )
-    if not source.isStreaming:
-        target = source.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
+    src = fan_out(source, src)
     return src.mapInArrow(
         run, schema="subj string, pred string, obj string, doc_id string, start int, stop int"
     )

@@ -117,8 +117,9 @@ def build_kg(
             f"{cat}.pawpaw.nodes"
         ) and spark.catalog.tableExists(f"{cat}.pawpaw.edges_canonical")
     else:
-        # probe for committed data: part files, or salt= directories in a
-        # store written before the global tables were flat
+        # probe for committed data: part files or partition directories
+        # (edges_canonical's pred=, or the salt= of a store written
+        # before the global tables dropped their salt directories)
         outputs_exist = has_data(spark, nodes_out) and has_data(spark, edges_out)
     if ("__global__", canon_fp) in canon_done and outputs_exist:
         if cat is not None:
@@ -142,7 +143,7 @@ def build_kg(
             ),
             "pawpaw.edges_canonical",
             edges_out,
-            (),
+            ("pred",),
         )
         lineage.record(
             spark,

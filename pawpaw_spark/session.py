@@ -54,8 +54,8 @@ def get_spark(
         # NOTE: spark.sql.files.minPartitionNum is deliberately NOT set:
         # parquet cannot split below row-group granularity, so the floor
         # only manufactures empty splits — which hide under-splitting
-        # from the explicit fan-out heuristics in segment()/_fan()
-        # (they repartition when getNumPartitions() < defaultParallelism).
+        # from the explicit fan-out heuristic (segment.fan_out repartitions
+        # when the input has fewer partitions than defaultParallelism).
         .config("spark.driver.memory", os.environ.get("PAWPAW_SPARK_DRIVER_MEM", "48g"))
         # Batch-throughput GC: the edge tables materialize millions of
         # short-lived strings per task; G1's pause-time targeting caps
@@ -74,6 +74,13 @@ def get_spark(
         # Python workers start in the JVM's cwd; put this package on
         # their path so UDFs unpickle from any cwd
         .config("spark.executorEnv.PYTHONPATH", _worker_python_path())
+        # PySpark's per-call origin capture (the Python call site shown in
+        # DataFrame error contexts) costs ~6 py4j round trips on every
+        # Column/DataFrame call: SPARQL compile, fixpoint loops and build
+        # planning are driver-side chains of such calls. PySpark reads
+        # the flag once per process, at its first such call, so it is a
+        # creation default (``extra_conf`` can turn the capture back on)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

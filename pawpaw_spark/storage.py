@@ -14,6 +14,7 @@ catalog, so these helpers go through ``saveAsTable`` and read back via
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _ICEBERG_CATALOG_IMPLS = (
     "org.apache.iceberg.spark.SparkCatalog",
@@ -62,15 +63,20 @@ def write_partitioned(
     ``path``. The input goes through a REBALANCE hint on the partition
     columns: AQE coalesces small shuffle partitions and splits skewed
     ones up to the advisory size, so tasks write few files of a useful
-    size instead of a (tasks x partitions) small-file explosion. With no
-    ``partition_cols`` the table is flat files: that is how
-    ``build_kg`` writes the KG store's global tables, since no reader
-    filters on their ``salt`` key. (The per-bucket lineage tables keep
-    ``bucket=`` directories, their resume unit; ``lineage.run_stage``
-    writes those through the same REBALANCE hint on ``bucket``, so the
-    files inside each directory are AQE-sized as well.) Returns a
-    re-read of the written table (downstream consumers read the
-    materialized form, never re-run the producing plan)."""
+    size instead of a (tasks x partitions) small-file explosion.
+    ``build_kg`` writes ``edges_canonical`` one directory per ``pred``
+    value (every constant-predicate query slice reads one directory),
+    and ``nodes`` / ``node_metrics`` with no ``partition_cols``, as flat
+    files: no reader filters on their ``salt`` key. (The per-bucket
+    lineage tables keep ``bucket=`` directories, their resume unit;
+    ``lineage.run_stage`` writes those through the same REBALANCE hint
+    on ``bucket``, so the files inside each directory are AQE-sized as
+    well.) Returns a re-read of the written table (downstream consumers
+    read the materialized form, never re-run the producing plan). The
+    re-read takes the written schema, partition columns last as a plain
+    read orders them: a partition column keeps its written type rather
+    than the one Spark would infer from the directory names (``pred``
+    values ``"1"``, ``"2"`` stay strings)."""
     spark = df.sparkSession
     cat = iceberg_catalog(spark)
     clustered = df.hint("rebalance", *partition_cols)
@@ -106,7 +112,9 @@ def write_partitioned(
                 spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     else:
         writer.parquet(path)
-    return spark.read.parquet(path)
+    fields = [f for f in df.schema.fields if f.name not in partition_cols]
+    fields += [df.schema[c] for c in partition_cols]
+    return spark.read.schema(StructType(fields)).parquet(path)
 
 
 def write_bucketed(

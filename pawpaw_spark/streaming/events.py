@@ -343,10 +343,11 @@ def streaming_kg_sink(
 
     Layout: ``pred`` is the leading partition column, so downstream
     consumers (motif slices, the analytics queries, plumule-over-KG)
-    get partition pruning on constant-predicate reads (the batch
-    store's ``edges_canonical`` has none: it is flat AQE-sized files);
-    ``batch_id`` under it is the replay/idempotence unit and doubles as
-    ingest lineage (which micro-batch produced each file). ``metrics_path``
+    get partition pruning on constant-predicate reads, as they do on
+    the batch store's ``edges_canonical`` (partitioned by ``pred``
+    too); ``batch_id`` under it is the replay/idempotence unit and
+    doubles as ingest lineage (which micro-batch produced each file).
+    ``metrics_path``
     (default ``{edges_path}/_metrics``) gets one row per (batch_id,
     pred) with edge and doc counts — the per-partition metrics surface
     the north rule asks for, written with the same dynamic-overwrite

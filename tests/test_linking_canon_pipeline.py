@@ -301,17 +301,18 @@ class TestAnalyticsStage:
         assert log3 == log1 + 1, "iters change did not recompute analytics"
 
 
-# read-back schemas of the global tables as written one directory per
-# salt value (salt inferred as int from the directory names); the flat
-# layout must read back identically
-_SALT_DIR_SCHEMAS = {
+# read-back schemas of the global tables. nodes and node_metrics read
+# back as the salt directories gave them (salt an int, last);
+# edges_canonical is one directory per pred value, which a plain read
+# puts last
+_STORE_SCHEMAS = {
     "nodes": [
         ("node_id", "string"), ("kind", "string"), ("canon_id", "string"),
         ("salt", "int"),
     ],
     "edges_canonical": [
-        ("subj", "string"), ("pred", "string"), ("obj", "string"),
-        ("doc_id", "string"), ("start", "int"), ("stop", "int"), ("salt", "int"),
+        ("subj", "string"), ("obj", "string"), ("doc_id", "string"),
+        ("start", "int"), ("stop", "int"), ("salt", "int"), ("pred", "string"),
     ],
     "node_metrics": [
         ("node", "string"), ("out_deg", "bigint"), ("in_deg", "bigint"),
@@ -319,9 +320,16 @@ _SALT_DIR_SCHEMAS = {
     ],
 }
 
+# edges_canonical's column order before it had pred directories
+_EARLIER_EDGES_COLS = ["subj", "pred", "obj", "doc_id", "start", "stop", "salt"]
 
-def _salt_dirs(path):
-    return [e for e in os.listdir(path) if e.startswith("salt=")]
+
+def _dirs(path, key):
+    return sorted(e for e in os.listdir(path) if e.startswith(f"{key}="))
+
+
+def _part_files(path):
+    return [e for e in os.listdir(path) if e.startswith("part-")]
 
 
 def _rows(df):
@@ -333,28 +341,68 @@ def _rows(df):
     return Counter(tuple(map(freeze, r)) for r in df.collect())
 
 
-class TestStoreLayout:
-    """The global tables (nodes, edges_canonical, node_metrics) are flat
-    AQE-sized parquet files; the per-bucket lineage tables keep their
-    ``bucket=`` directories."""
+@pytest.fixture(scope="module")
+def store(spark, src, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("kg_layout"))
+    build_kg(spark, src, out, n_buckets=8, analytics=True)
+    return out
 
-    def test_global_tables_flat_with_unchanged_schema(
-        self, spark, src, tmp_path_factory
-    ):
-        out = str(tmp_path_factory.mktemp("kg_layout"))
-        build_kg(spark, src, out, n_buckets=8, analytics=True)
+
+class TestStoreLayout:
+    """``edges_canonical`` is one ``pred=`` directory per predicate;
+    ``nodes`` and ``node_metrics`` are flat AQE-sized parquet files; the
+    per-bucket lineage tables keep their ``bucket=`` directories."""
+
+    def test_layout_and_read_back_schemas(self, spark, store):
         width = spark.sparkContext.defaultParallelism
-        for table, schema in _SALT_DIR_SCHEMAS.items():
-            path = f"{out}/{table}"
-            assert _salt_dirs(path) == [], table
-            parts = [e for e in os.listdir(path) if e.startswith("part-")]
-            assert 1 <= len(parts) <= width, (table, parts)
+        edges = f"{store}/edges_canonical"
+        preds = spark.read.parquet(edges).select("pred").distinct().collect()
+        assert len(preds) > 1
+        assert _dirs(edges, "pred") == sorted(f"pred={r.pred}" for r in preds)
+        assert _part_files(edges) == []
+        for table in ("nodes", "node_metrics"):
+            path = f"{store}/{table}"
+            assert _dirs(path, "salt") == [], table
+            assert 1 <= len(_part_files(path)) <= width, table
+        for table, schema in _STORE_SCHEMAS.items():
             got = [
                 (f.name, f.dataType.simpleString())
-                for f in spark.read.parquet(path).schema.fields
+                for f in spark.read.parquet(f"{store}/{table}").schema.fields
             ]
             assert got == schema, table
-        assert any(e.startswith("bucket=") for e in os.listdir(f"{out}/edges"))
+        assert _dirs(f"{store}/edges", "bucket")
+
+    def test_constant_predicate_reads_one_directory(self, spark, store, tmp_path):
+        """A constant-predicate query plans a partition filter on pred
+        and opens no file outside that predicate's directory: it still
+        answers after every other directory's files are broken.
+        (``inputFiles()`` lists the whole relation for a path read, so
+        the files actually opened are checked this way.)"""
+        import shutil
+
+        from pawpaw_spark.operators.sparql import sparql
+
+        path = str(tmp_path / "edges_canonical")
+        shutil.copytree(f"{store}/edges_canonical", path)
+        edges = spark.read.parquet(path).select("subj", "pred", "obj")
+        want = {
+            (r.subj, r.obj)
+            for r in edges.filter(F.col("pred") == "DEFINES").collect()
+        }
+        assert want
+        q = sparql(edges, "SELECT ?f ?t WHERE { ?f DEFINES ?t }")
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters: [isnotnull(pred" in plan, plan
+        assert "(pred#" in plan and "= DEFINES)]" in plan, plan
+        others = [d for d in _dirs(path, "pred") if d != "pred=DEFINES"]
+        assert others
+        for d in others:
+            for f in _part_files(f"{path}/{d}"):
+                with open(f"{path}/{d}/{f}", "wb") as fh:
+                    fh.write(b"not parquet")
+        with pytest.raises(Exception):
+            edges.filter(F.col("pred") == others[0][len("pred="):]).collect()
+        assert {(r.f, r.t) for r in q.collect()} == want
 
     def test_canonicalize_nodes_salt_is_int(self, spark):
         from pawpaw_spark.operators.canon import canonicalize_nodes
@@ -368,23 +416,33 @@ class TestStoreLayout:
         assert out.schema["salt"].dataType.simpleString() == "int"
         assert {r.canon_id for r in out.collect()} == {"sym:a"}
 
-    def test_resume_over_salt_directory_store(self, spark, src, tmp_path_factory):
-        """A store written one directory per salt value (the earlier
-        layout) resumes: unchanged input skips canon and reads it as is;
-        changed input rewrites it flat, with no stale salt= directory."""
+    @pytest.mark.parametrize("layout", ["salt_dirs", "flat"])
+    def test_resume_over_earlier_layout(self, spark, src, tmp_path_factory, layout):
+        """A store in an earlier layout resumes: unchanged input skips
+        canon and reads it as is; one edited file rewrites it (nodes
+        flat, edges_canonical by pred) with no stale file left, equal to
+        a fresh build. ``salt_dirs``: both global tables one directory
+        per salt value; ``flat``: edges_canonical as flat files."""
         import shutil
 
         from pawpaw_spark.lineage import LineageLog
 
-        out = str(tmp_path_factory.mktemp("kg_old_layout"))
+        out = str(tmp_path_factory.mktemp(f"kg_{layout}_layout"))
         build_kg(spark, src, out, n_buckets=8)
-        for table in ("nodes", "edges_canonical"):
+        tables = ("nodes", "edges_canonical") if layout == "salt_dirs" else ("edges_canonical",)
+        for table in tables:
             path = f"{out}/{table}"
-            spark.read.parquet(path).write.partitionBy("salt").parquet(path + ".old")
+            df = spark.read.parquet(path)
+            if table == "edges_canonical":
+                df = df.select(*_EARLIER_EDGES_COLS)
+            writer = df.write.partitionBy("salt") if layout == "salt_dirs" else df.write
+            writer.parquet(path + ".old")
             shutil.rmtree(path)
             os.rename(path + ".old", path)
-            assert _salt_dirs(path)
-        before = _rows(spark.read.parquet(f"{out}/edges_canonical"))
+        edges = f"{out}/edges_canonical"
+        assert _dirs(edges, "pred") == []
+        entries = sorted(os.listdir(edges))
+        before = _rows(spark.read.parquet(edges))
 
         def canon_runs():
             return LineageLog(out).read(spark).filter(F.col("stage") == "canon").count()
@@ -393,9 +451,9 @@ class TestStoreLayout:
         res = build_kg(spark, src, out, n_buckets=8)
         assert canon_runs() == 1, "canon re-ran on unchanged input"
         assert _rows(res["edges_canonical"]) == before
-        assert _salt_dirs(f"{out}/edges_canonical")
+        assert sorted(os.listdir(edges)) == entries
 
-        # one edited file -> canon re-runs and rewrites both tables flat
+        # one edited file -> canon re-runs and rewrites both tables
         first = src.select("repo", "path").orderBy("repo", "path").first()
         edited = (F.col("repo") == first.repo) & (F.col("path") == first.path)
         changed = src.withColumn(
@@ -406,12 +464,14 @@ class TestStoreLayout:
         res = build_kg(spark, changed, out, n_buckets=8)
         assert canon_runs() == 2
         for table in ("nodes", "edges_canonical"):
-            assert _salt_dirs(f"{out}/{table}") == [], table
-        fresh = str(tmp_path_factory.mktemp("kg_old_layout_fresh"))
+            assert _dirs(f"{out}/{table}", "salt") == [], table
+        assert _part_files(edges) == []
+        assert _dirs(edges, "pred")
+        assert _part_files(f"{out}/nodes")
+        fresh = str(tmp_path_factory.mktemp(f"kg_{layout}_layout_fresh"))
         want = build_kg(spark, changed, fresh, n_buckets=8)
         for table in ("nodes", "edges_canonical"):
             assert _rows(res[table]) == _rows(want[table]), table
-
 
     def test_resume_over_salted_stage_layout(self, spark, src, tmp_path_factory):
         """Stage tables written with the earlier 8-way content salt

@@ -1074,3 +1074,38 @@ class TestSparqlUpdate:
             ).collect()
         with pytest.raises(ValueError, match="trailing"):
             parse_update("DELETE DATA { a b c } extra")
+
+
+class TestCompileRoundTrips:
+    """Compiling a query is a chain of py4j calls on the driver; the
+    count is pinned so per-call overhead does not creep back in."""
+
+    # 26 measured with PySpark's per-call origin capture off (a
+    # get_spark default) and no identity projection; 37 with
+    # match_pattern's final projection always applied, 86 with the
+    # capture on
+    MAX_ROUND_TRIPS = 32
+
+    def test_one_triple_select(self, spark):
+        import threading
+
+        e = _triples(spark, KG)
+        text = "SELECT ?f ?t WHERE { ?f DEFINES ?t }"
+        sparql(e, text)  # first compile warms PySpark's one-off lookups
+        client = spark.sparkContext._gateway._gateway_client
+        me = threading.get_ident()
+        calls = []
+        send = client.send_command
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == me:
+                calls.append(1)
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            q = sparql(e, text)
+        finally:
+            del client.send_command
+        assert len(calls) <= self.MAX_ROUND_TRIPS, len(calls)
+        assert _t(q) == {("f1", "s1"), ("f2", "s2"), ("f3", "s3")}

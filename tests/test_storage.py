@@ -1,6 +1,8 @@
 """Bucketed layout: co-partitioned joins must plan WITHOUT an exchange
 on either bucketed side (the §4.2 scale claim, verified on the plan)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,13 +82,36 @@ def test_write_partitioned_parquet_fallback(spark, tmp_path):
     back = write_partitioned(df, "pawpaw.t", out, ("salt",))
     assert back.count() == 100
     # physically partitioned: one directory per salt value
-    import os
-
     dirs = [e for e in os.listdir(out) if e.startswith("salt=")]
     assert sorted(dirs) == ["salt=0", "salt=1", "salt=2", "salt=3"]
     # partition pruning reaches the scan
     plan = back.filter(F.col("salt") == 2)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(salt" in plan, plan
+
+
+def test_write_partitioned_keeps_string_partition_type(spark, tmp_path):
+    """A string partition column whose values look numeric reads back as
+    written, not as the int a plain read infers from the directory
+    names."""
+    from pawpaw_spark.storage import write_partitioned
+
+    df = spark.createDataFrame(
+        [("a", "1", 7), ("b", "2", 8), ("c", "1", 9)],
+        "subj string, pred string, salt int",
+    )
+    out = str(tmp_path / "str_part")
+    back = write_partitioned(df, "pawpaw.t", out, ("pred",))
+    assert sorted(e for e in os.listdir(out) if e.startswith("pred=")) == [
+        "pred=1", "pred=2",
+    ]
+    assert [(f.name, f.dataType.simpleString()) for f in back.schema.fields] == [
+        ("subj", "string"), ("salt", "int"), ("pred", "string"),
+    ]
+    assert sorted(map(tuple, back.collect())) == [
+        ("a", 7, "1"), ("b", 8, "2"), ("c", 9, "1"),
+    ]
+    # what the explicit schema guards against
+    assert spark.read.parquet(out).schema["pred"].dataType.simpleString() == "int"
 
 
 class TestZValue:
