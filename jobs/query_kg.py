@@ -54,6 +54,7 @@ def main() -> None:
 
     from pawpaw_spark.session import get_spark
     from pawpaw_spark.operators.sparql import sparql, sparql_update
+    from pawpaw_spark.storage import read_parquet
 
     if (args.query is None) == (args.update is None):
         raise SystemExit("pass exactly one of --query / --update")
@@ -62,7 +63,7 @@ def main() -> None:
                          "updates never mutate the store in place)")
     spark = get_spark(app_name="query_kg", master=args.master)
     path = f"{args.store}/{args.table}"
-    edges = spark.read.parquet(path)
+    edges = read_parquet(spark, path, ("pred",))
     cols = ["subj", "pred", "obj"] + (
         ["graph"] if "graph" in edges.columns else []
     )

@@ -17,7 +17,7 @@ from pawpaw_spark.operators.canon import canonicalize_nodes, rewrite_edges_canon
 from pawpaw_spark.operators.linking import link_symbols
 from pawpaw_spark.operators.segment import check_sha256_invariant, with_sha256
 from pawpaw_spark.operators.triples import build_edges, build_nodes, segment_by_lang
-from pawpaw_spark.storage import has_data, iceberg_catalog, write_partitioned
+from pawpaw_spark.storage import has_data, iceberg_catalog, read_parquet, write_partitioned
 
 
 def build_kg(
@@ -127,7 +127,7 @@ def build_kg(
             edges_canon = spark.table(f"{cat}.pawpaw.edges_canonical")
         else:
             nodes_canon = spark.read.parquet(nodes_out)
-            edges_canon = spark.read.parquet(edges_out)
+            edges_canon = read_parquet(spark, edges_out, ("pred",))
     else:
         t0 = time.time()
         match_edges = link_symbols(segments, threshold=link_threshold)

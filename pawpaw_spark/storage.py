@@ -14,7 +14,7 @@ catalog, so these helpers go through ``saveAsTable`` and read back via
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 _ICEBERG_CATALOG_IMPLS = (
     "org.apache.iceberg.spark.SparkCatalog",
@@ -71,12 +71,10 @@ def write_partitioned(
     lineage tables keep ``bucket=`` directories, their resume unit;
     ``lineage.run_stage`` writes those through the same REBALANCE hint
     on ``bucket``, so the files inside each directory are AQE-sized as
-    well.) Returns a re-read of the written table (downstream consumers
-    read the materialized form, never re-run the producing plan). The
-    re-read takes the written schema, partition columns last as a plain
-    read orders them: a partition column keeps its written type rather
-    than the one Spark would infer from the directory names (``pred``
-    values ``"1"``, ``"2"`` stay strings)."""
+    well.) Returns a re-read of the written table through
+    ``read_parquet`` (downstream consumers read the materialized form,
+    never re-run the producing plan): a string partition column reads
+    back as ``string`` whatever its values."""
     spark = df.sparkSession
     cat = iceberg_catalog(spark)
     clustered = df.hint("rebalance", *partition_cols)
@@ -112,8 +110,26 @@ def write_partitioned(
                 spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     else:
         writer.parquet(path)
-    fields = [f for f in df.schema.fields if f.name not in partition_cols]
-    fields += [df.schema[c] for c in partition_cols]
+    strings = [c for c in partition_cols if isinstance(df.schema[c].dataType, StringType)]
+    return read_parquet(spark, path, strings)
+
+
+def read_parquet(
+    spark: SparkSession, path: str, string_cols: tuple[str, ...] | list[str] = ()
+) -> DataFrame:
+    """Read the parquet table at ``path``; the columns in ``string_cols``
+    come back as ``string``. Spark types a partition column from its
+    directory names, so ``pred=1`` / ``pred=2`` would read back as int;
+    only then is the table re-read with those columns as strings.
+    ``write_partitioned`` and ``build_kg``'s resume both read through
+    here, so a fresh build and a resume give one schema."""
+    df = spark.read.parquet(path)
+    fields = [
+        StructField(f.name, StringType(), f.nullable) if f.name in string_cols else f
+        for f in df.schema.fields
+    ]
+    if fields == df.schema.fields:
+        return df
     return spark.read.schema(StructType(fields)).parquet(path)
 
 

@@ -360,6 +360,11 @@ class TestStoreLayout:
         assert len(preds) > 1
         assert _dirs(edges, "pred") == sorted(f"pred={r.pred}" for r in preds)
         assert _part_files(edges) == []
+        # no small-file explosion: REBALANCE on pred sizes the files
+        # across all the pred directories together
+        per_pred = [len(_part_files(f"{edges}/{d}")) for d in _dirs(edges, "pred")]
+        assert min(per_pred) >= 1, per_pred
+        assert 1 <= sum(per_pred) <= width, per_pred
         for table in ("nodes", "node_metrics"):
             path = f"{store}/{table}"
             assert _dirs(path, "salt") == [], table

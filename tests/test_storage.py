@@ -92,8 +92,8 @@ def test_write_partitioned_parquet_fallback(spark, tmp_path):
 def test_write_partitioned_keeps_string_partition_type(spark, tmp_path):
     """A string partition column whose values look numeric reads back as
     written, not as the int a plain read infers from the directory
-    names."""
-    from pawpaw_spark.storage import write_partitioned
+    names; ``read_parquet`` (the resume read) gives the same frame."""
+    from pawpaw_spark.storage import read_parquet, write_partitioned
 
     df = spark.createDataFrame(
         [("a", "1", 7), ("b", "2", 8), ("c", "1", 9)],
@@ -110,7 +110,10 @@ def test_write_partitioned_keeps_string_partition_type(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == [
         ("a", 7, "1"), ("b", 8, "2"), ("c", 9, "1"),
     ]
-    # what the explicit schema guards against
+    again = read_parquet(spark, out, ("pred",))
+    assert again.schema == back.schema
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, back.collect()))
+    # what read_parquet guards against
     assert spark.read.parquet(out).schema["pred"].dataType.simpleString() == "int"
 
 
